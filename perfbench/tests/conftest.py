@@ -1,0 +1,15 @@
+"""Puts the benchmark's modules and the engine package on ``sys.path``.
+
+    python3 -m pytest perfbench/tests -q
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+BENCH = os.path.dirname(HERE)
+for path in (BENCH, os.path.dirname(BENCH)):
+    if path not in sys.path:
+        sys.path.insert(0, path)
