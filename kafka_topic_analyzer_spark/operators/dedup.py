@@ -84,7 +84,12 @@ def _right_sized_shuffle(spark, n_keys: int):
     return scoped_shuffle_partitions(spark, target)
 
 
-def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFrame:
+# Propagation-hop cap for connected_components (hops run two per job);
+# near-dup graphs are near-cliques of diameter 1-2.
+_CC_MAX_HOPS = 20
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components over an undirected edge list — the step that
     turns pairwise near-dup evidence into dedup clusters (keep one doc
     per component).
@@ -111,10 +116,9 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
     (observed as a DECIMAL(38,0) metric during materialization) is
     strictly decreasing until the fixpoint, and "sum unchanged" ==
     "no label changed". That removes BOTH the per-batch limit(1) probe
-    job and the old-vs-new label join the probe needed. For
-    adversarially long chains, use :func:`connected_components_star`
-    (large-star/small-star, O(log n) rounds) — identical output by
-    uniqueness of the fixpoint.
+    job and the old-vs-new label join the probe needed. A graph whose
+    labels still change after ``_CC_MAX_HOPS`` hops (diameter beyond the
+    cap) raises ``RuntimeError`` instead of returning non-minimal labels.
     """
     from pyspark.sql import Observation
 
@@ -161,7 +165,7 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
             .localCheckpoint(eager=True)
         )
         prev_sum = obs0.get["s"]
-        for i in range(0, max_iterations, 2):
+        for _ in range(0, _CC_MAX_HOPS, 2):
             # two hops composed into one checkpointed job; convergence =
             # the observed label sum stopped decreasing (monotonicity —
             # see docstring), collected DURING the materialization, so a
@@ -180,97 +184,12 @@ def connected_components(edges: DataFrame, max_iterations: int = 20) -> DataFram
             if new_sum == prev_sum:
                 break
             prev_sum = new_sum
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge within {_CC_MAX_HOPS} "
+                "propagation hops: the graph diameter exceeds the hop cap"
+            )
     return labels
-
-
-def connected_components_star(edges: DataFrame, max_rounds: int = 12) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds.
-
-    The adversarial-diameter option promised on
-    :func:`connected_components`: where min-label propagation needs
-    diameter-many hops (a 1M-long chain = 1M shuffles), this converges
-    in O(log n) rounds regardless of diameter (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14 — public
-    algorithm). Identical ``(doc_id, cluster_id=component min)`` output
-    by uniqueness of the fixpoint; equality is pinned by unit test.
-
-    Per round: large-star hangs every node's strictly-larger neighbors
-    off the neighborhood min, small-star re-parents the smaller ones —
-    each is one groupBy shuffle plus an id-keyed join, edges stay bare
-    id pairs, and ``localCheckpoint`` truncates lineage per round.
-    Convergence = edge-multiset checksum unchanged (count + wrapped hash
-    sums — deterministic, no full edge-set comparison job).
-    """
-    raw = edges.select(
-        F.col("src").cast("long").alias("u"), F.col("dst").cast("long").alias("v")
-    )
-    # vertex set from the RAW edges: a vertex whose only edge is a
-    # self-loop must still come out labeled (its own singleton component,
-    # matching connected_components) — deriving nodes after the self-loop
-    # filter silently dropped it (found by the union-find property test)
-    nodes = (
-        raw.select("u").union(raw.select(F.col("v").alias("u"))).distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        raw.where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def large_star(ed: DataFrame) -> DataFrame:
-        sym = ed.union(ed.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-        return (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def small_star(ed: DataFrame) -> DataFrame:
-        orient = ed.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins = orient.groupBy("u").agg(F.min("v").alias("m"))  # m < u always
-        re_par = orient.join(mins, "u").select(
-            F.col("v").alias("u"), F.col("m").alias("v")
-        )
-        self_edge = mins.select(F.col("u"), F.col("m").alias("v"))
-        return (
-            re_par.union(self_edge)
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def checksum(ed: DataFrame):
-        # count + XOR of per-edge hashes: order-independent, no overflow
-        # (ANSI mode rejects wrapping sums), exact on a distinct edge set
-        row = ed.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = checksum(e)
-    with _right_sized_shuffle(edges.sparkSession, prev[0]):
-        for _ in range(max_rounds):
-            e = small_star(large_star(e)).localCheckpoint(eager=True)
-            sig = checksum(e)
-            if sig == prev:
-                break
-            prev = sig
-    # at the fixpoint the edge set is a star forest: (node → component min)
-    label_map = e.groupBy("u").agg(F.min("v").alias("cluster_id"))
-    return (
-        nodes.join(label_map, "u", "left")
-        .select(
-            F.col("u").alias("doc_id"),
-            F.coalesce("cluster_id", F.col("u")).alias("cluster_id"),
-        )
-    )
 
 
 def shingle_index(docs: DataFrame, k: int = 3, max_df: int = 50) -> DataFrame:
@@ -445,6 +364,8 @@ def lsh_permutation_match_masks(
     filter is all-or-nothing per doc (sigs are min-aggregates over the
     same hash rows) and matches ``sig_0 IS NOT NULL`` here.
     """
+    if n_perm > 64:
+        raise ValueError("n_perm must be at most 64 (one long-mask bit each)")
     ex = (
         signatures.where(F.col("sig_0").isNotNull())
         .select(
@@ -485,8 +406,10 @@ def lsh_mask_band_hit(
     aligned band of ``n_perm // bands`` consecutive agreeing permutations
     — i.e. the pair IS an LSH candidate at this banding (see
     :func:`lsh_permutation_match_masks` for the exactness argument)."""
+    if n_perm > 64:
+        raise ValueError("n_perm must be at most 64 (one long-mask bit each)")
     if n_perm % bands:
-        raise ValueError("n_perm must divide evenly into bands")
+        raise ValueError("bands must divide evenly into n_perm")
     r = n_perm // bands
     full = (1 << r) - 1
     hit = None
@@ -617,13 +540,7 @@ def simhash_fingerprints_wide(docs: DataFrame, bits: int = 48) -> DataFrame:
 
 
 def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    bits: int = 48,
-    fingerprints: DataFrame | None = None,
-    materialize_threshold: int = 100_000,
-    n_docs: int | None = None,
+    docs: DataFrame, max_hamming: int = 3, bands: int = 4, bits: int = 48
 ) -> DataFrame:
     """SimHash near-dup pairs (doc_i < doc_j, hamming <= max_hamming).
 
@@ -638,34 +555,18 @@ def simhash_near_dup_pairs(
     (``bit_count(xor)``) is pure JVM column arithmetic.
 
     Self-join cost note: Catalyst plans the fingerprint subtree on BOTH
-    join sides (no exchange reuse even under AQE — measured), so with
-    recompute the corpus text is scanned/tokenized twice. Recompute wins
-    below ~10^5 docs (3.8s vs 4.5s at sf0.1 — localCheckpoint's blocking
-    serialization costs more than the second tiny scan), but at corpus
-    scale the double tokenize dominates, so above
-    ``materialize_threshold`` docs the fingerprints are auto-materialized
-    via ``localCheckpoint`` and the text is scanned ONCE. Callers that
-    keep a persisted fingerprint table (which a real pipeline maintains
-    as an artifact anyway) pass ``fingerprints=`` and skip both the
-    count probe and the recompute.
-
-    Probe cost: the auto-materialize ``count()`` is a cheap column-less
-    scan only when ``docs`` is a plain table; on a DERIVED frame it
-    re-executes the upstream subtree — pass ``n_docs=`` (or
-    ``fingerprints=``) to skip it.
+    join sides (no exchange reuse even under AQE — measured), so the
+    corpus text is scanned/tokenized twice. That recompute is the only
+    shape ever measured to pay: 3.8s vs 4.5s at sf0.1 against a
+    ``localCheckpoint`` of the fingerprints, whose blocking serialization
+    costs more than the second scan.
     """
     if max_hamming >= bands:
         raise ValueError("banded candidates are exact only for max_hamming < bands")
     if bits % bands:
         raise ValueError("bits must divide evenly into bands")
     width = bits // bands
-    if fingerprints is not None:
-        fp = fingerprints
-    else:
-        fp = simhash_fingerprints_wide(docs, bits)
-        n = n_docs if n_docs is not None else docs.count()
-        if n > materialize_threshold:
-            fp = fp.localCheckpoint(eager=True)
+    fp = simhash_fingerprints_wide(docs, bits)
     banded = fp.select(
         "doc_id",
         "simhash",
@@ -699,49 +600,40 @@ def simhash_near_dup_pairs(
     )
 
 
+# Largest corpus embedding_near_dup_pairs broadcasts. The driver holds
+# one collected copy while building the broadcast (collect() materializes
+# Rows first, a 3-5x transient over the ~128 MB matrix at 250k x 64-dim
+# float64); larger corpora take the blocked strategy. Module-level so
+# tests can force the blocked side on small fixtures.
+_MAX_BROADCAST_ROWS = 250_000
+# Bytes of ONE blocked group's vectors; the block count derives from it.
+_BLOCK_GROUP_TARGET_BYTES = 256 << 20
+
+
 def embedding_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    round_digits: int = 6,
-    strategy: str = "auto",
-    max_broadcast_rows: int = 250_000,
-    blocks: int | None = None,
-    n_rows: int | None = None,
-    dim_hint: int = 64,
-    group_target_bytes: int = 256 << 20,
+    emb: DataFrame, threshold: float = 0.9, round_digits: int = 6
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (i < j, cosine >= threshold).
 
-    Two exact physical strategies, picked by corpus size:
+    Two exact physical strategies, picked from the corpus row count the
+    operator probes (a cheap column-less ``count()`` on a plain table):
 
-    * ``broadcast`` (small corpus): the corpus matrix is broadcast once;
-      each task scores its partition's block against it, emitting only
-      surviving pairs. Nothing quadratic crosses the wire. Bound: the
-      broadcast must fit in executor memory (~1 GB per 1M x 64-dim
-      float64) — and, before that, the driver must hold one copy while
-      building it (collect() materializes Rows first, a 3-5x transient
-      over the matrix), which is why this path is gated at a
-      conservative 250k rows (~128 MB matrix, r13 — judge r12 lowered
-      it from 1M) and never the silent default at scale.
-    * ``blocked`` (large corpus): distributed block-nested-loop — each
-      vector is replicated to the ``blocks`` block-pair groups it
-      participates in (B(B+1)/2 groups via ``groupBy(p, q)``), and each
-      group cross-scores its two blocks with ``applyInPandas``. No
-      driver materialization at any size; shuffle volume is
-      ``blocks`` x corpus (the inherent replication of a distributed
-      exact all-pairs scan). ``blocks=None`` derives B so one group's
-      VECTORS (~2n/B x dim_hint doubles) fit ``group_target_bytes``;
-      the quadratic pair-matrix term is NOT part of that bound — the
-      scorer chunks pairs to a fixed budget internally, so per-task peak
-      memory stays O(vectors + chunk) at any block size.
-
-    Probe cost: ``auto`` (and ``blocked`` without an explicit
-    ``blocks``) needs the corpus row count. That ``count()`` is a cheap
-    column-less scan for a plain parquet table, but for a DERIVED frame
-    (filters/joins/unions upstream) it executes the whole upstream
-    subtree as an extra job — callers holding a derived frame or looping
-    should pass ``n_rows=`` (and/or an explicit ``blocks``/``strategy``)
-    to skip the probe entirely.
+    * ``broadcast`` (up to ``_MAX_BROADCAST_ROWS``): the corpus matrix
+      is broadcast once; each task scores its partition's block against
+      it, emitting only surviving pairs. Nothing quadratic crosses the
+      wire. The bound keeps the driver's collected copy small (~128 MB
+      matrix at 250k rows, r13 — judge r12 lowered it from 1M).
+    * ``blocked`` (above it): distributed block-nested-loop — each
+      vector is replicated to the B block-pair groups it participates
+      in (B(B+1)/2 groups via ``groupBy(p, q)``), and each group
+      cross-scores its two blocks with ``applyInPandas``. No driver
+      materialization at any size; shuffle volume is B x corpus (the
+      inherent replication of a distributed exact all-pairs scan). B is
+      derived so one group's VECTORS (~2n/B x 64 doubles) fit
+      ``_BLOCK_GROUP_TARGET_BYTES``; the quadratic pair-matrix term is
+      NOT part of that bound — the scorer chunks pairs to a fixed budget
+      internally, so per-task peak memory stays O(vectors + chunk) at
+      any block size.
 
     Both paths accumulate numpy dot products SEQUENTIALLY over dims
     (``acc += x_d*y_d`` per dim — the identical IEEE-754 sequence as the
@@ -750,18 +642,13 @@ def embedding_near_dup_pairs(
     :func:`embedding_near_dups_lsh`, which prunes the pair space instead
     of enumerating it.
     """
-    n = None
-    if strategy == "auto" or (strategy == "blocked" and blocks is None):
-        n = n_rows if n_rows is not None else emb.count()
-    if strategy == "auto":
-        strategy = "broadcast" if n <= max_broadcast_rows else "blocked"
-    if strategy == "blocked":
-        if blocks is None:
-            # B >= 2*n*dim*8 / target  =>  one group's vectors fit the target
-            blocks = int(max(2, min(4096, -(-2 * n * dim_hint * 8 // group_target_bytes))))
+    n = emb.count()
+    if n > _MAX_BROADCAST_ROWS:
+        # B >= 2*n*dim*8 / target for 64-dim float64 vectors  =>  one
+        # group's vectors fit the target
+        blocks = -(-2 * n * 64 * 8 // _BLOCK_GROUP_TARGET_BYTES)
+        blocks = int(max(2, min(4096, blocks)))
         return _embedding_pairs_blockwise(emb, threshold, round_digits, blocks)
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy: {strategy}")
 
     from collections.abc import Iterator
 
@@ -947,8 +834,6 @@ def embedding_near_dups_lsh(
     bits: int = 4,
     tables: int = 8,
     round_digits: int = 6,
-    materialize_threshold: int = 100_000,
-    n_vecs: int | None = None,
 ) -> DataFrame:
     """Scale-path embedding near-dups: LSH-bucket candidates, exact verify.
 
@@ -958,21 +843,13 @@ def embedding_near_dups_lsh(
     with prob (1 - theta/pi)^bits per table; at threshold 0.9
     (theta <= 26°) and 4 bits that is ~0.52 per table, ~0.997 over 8.
 
-    Self-join cost note (r16 — the :func:`simhash_near_dup_pairs` policy,
-    same rationale): the bucket UDF is ``asNondeterministic`` (see
+    Self-join cost note (the :func:`simhash_near_dup_pairs` shape, same
+    rationale): the bucket UDF is ``asNondeterministic`` (see
     lsh_buckets), so Catalyst plans the full-corpus projection pass under
     BOTH sides of the bucket self-join — two numpy-matmul passes plus two
-    corpus scans. Below ``materialize_threshold`` vectors the recompute
-    stays (the blocking checkpoint serialization costs more than the
-    second tiny pass: interleaved A/B at sf0.1 read a noise-level
-    0.88-0.95 min-ratio with the pin always on); above it, the narrow
-    (vec_id, table_id, bucket) relation — exactly the LSH index table a
-    real deployment persists — is pinned once via ``localCheckpoint``
-    and both join sides scan the pin. Pass ``n_vecs`` — the corpus size
-    or any upper bound tight enough to decide against
-    ``materialize_threshold`` — to skip the count probe when the caller
-    knows it (or calls with a derived frame whose recount would
-    re-execute upstream work).
+    corpus scans. That recompute stays: pinning the narrow (vec_id,
+    table_id, bucket) relation read a noise-level 0.88-0.95 min-ratio in
+    an interleaved A/B at sf0.1, and no larger corpus was ever timed.
     """
     from kafka_topic_analyzer_spark.operators.similarity import lsh_buckets
 
@@ -983,9 +860,6 @@ def embedding_near_dups_lsh(
     bucketed = lsh_buckets(emb, dim, bits, tables).select(
         "vec_id", "table_id", "bucket"
     )
-    n = n_vecs if n_vecs is not None else emb.count()
-    if n > materialize_threshold:
-        bucketed = bucketed.localCheckpoint(eager=True)
     cands = (
         bucketed.alias("a")
         .join(bucketed.alias("b"), ["table_id", "bucket"])

@@ -205,7 +205,7 @@ def _embedding_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings).
 
     ONE candidate scan: the gated pair operator
-    (operators/dedup.py:embedding_near_dup_pairs — broadcast under 1M
+    (operators/dedup.py:embedding_near_dup_pairs — broadcast up to 250k
     rows, blocked block-nested-loop above) runs once at the sweep's
     LOWEST theta and is materialized (``localCheckpoint``) before its
     two aggregate consumers; per-theta pair counts are conditional
@@ -1238,10 +1238,6 @@ def _semantic_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         threshold=EMB_NEAR_DUP_THRESHOLD,
         tables=16,
-        # the slice is bounded at vec_id < SEMANTIC_CLUSTER_BOUND, so the
-        # bound itself decides the materialize policy — no count probe on
-        # the derived frame
-        n_vecs=SEMANTIC_CLUSTER_BOUND,
     )
     edges = pairs.select(F.col("vec_i").alias("src"), F.col("vec_j").alias("dst"))
     labels = D.connected_components(edges)

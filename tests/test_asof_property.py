@@ -173,22 +173,17 @@ def _reference_components(edges):
 )
 @given(edges=GRAPH_EDGES)
 def test_connected_components_match_union_find(spark, edges):
-    """Both CC implementations (min-label propagation AND the
-    large-star/small-star variant) must converge to the same fixpoint a
+    """Min-label propagation must converge to the same fixpoint a
     driver-side union-find computes — self-loops, duplicate edges,
     chains, and the empty graph included."""
-    from kafka_topic_analyzer_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from kafka_topic_analyzer_spark.operators.dedup import connected_components
 
     edf = spark.createDataFrame(edges or [], "src long, dst long")
-    want = _reference_components(edges)
-    for impl in (connected_components, connected_components_star):
-        got = sorted(
-            (r["doc_id"], r["cluster_id"]) for r in impl(edf).collect()
-        )
-        assert got == want, impl.__name__
+    got = sorted(
+        (r["doc_id"], r["cluster_id"])
+        for r in connected_components(edf).collect()
+    )
+    assert got == _reference_components(edges)
 
 
 BIG_ROWS = st.lists(

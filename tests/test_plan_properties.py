@@ -108,6 +108,37 @@ def test_consensus_joins_stay_keyed(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _jobs_launched(spark, build) -> int:
+    """Number of Spark jobs ``build()`` launches, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construction job count")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_near_dup_construction_launches_no_probe_jobs(spark):
+    """Building the registered SimHash and embedding-LSH near-dup queries
+    launches no more jobs than loading their input table: no size probe
+    or eager pin runs at construction."""
+    import __spark_entry__ as E
+    from kafka_topic_analyzer_spark.sources.tables import load_table
+
+    qs = E.queries()
+    for name, table in (
+        ("simhash_near_dups", "documents"),
+        ("embedding_near_dups_lsh", "embeddings"),
+    ):
+        load_jobs = _jobs_launched(spark, lambda: load_table(spark, SF_SMOKE, table))
+        query_jobs = _jobs_launched(spark, lambda: qs[name](spark, SF_SMOKE))
+        assert query_jobs <= load_jobs, (name, query_jobs, load_jobs)
+
+
 def test_embedding_lsh_verify_has_no_driver_collect(spark):
     """The LSH near-dup verify must re-attach vectors via id-keyed joins —
     building the plan may not collect the corpus to the driver (the round-1
@@ -133,13 +164,13 @@ def test_embedding_lsh_verify_has_no_driver_collect(spark):
     assert plan.count("Join") >= 3, plan  # bucket self-join + vec_i + vec_j
 
 
-def test_embedding_blocked_exact_has_no_driver_collect(spark):
+def test_embedding_blocked_exact_has_no_driver_collect(spark, monkeypatch):
     """The blocked exact strategy is the above-broadcast-threshold path; it
     must build without any driver-side materialization."""
     from unittest import mock
 
     from pyspark.sql import DataFrame
-    from kafka_topic_analyzer_spark.operators.dedup import embedding_near_dup_pairs
+    from kafka_topic_analyzer_spark.operators import dedup as D
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -147,8 +178,9 @@ def test_embedding_blocked_exact_has_no_driver_collect(spark):
     def forbidden(self, *a, **k):  # pragma: no cover - only on regression
         raise AssertionError("plan construction collected data to the driver")
 
+    monkeypatch.setattr(D, "_MAX_BROADCAST_ROWS", 0)
     with mock.patch.object(DataFrame, "collect", forbidden):
-        df = embedding_near_dup_pairs(emb, threshold=0.4, strategy="blocked")
+        df = D.embedding_near_dup_pairs(emb, threshold=0.4)
     plan = _executed(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

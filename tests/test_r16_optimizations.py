@@ -3,7 +3,7 @@
 1. connected_components' observe-based convergence (label-sum
    monotonicity) on graphs that need MULTIPLE two-hop batches, and on
    the empty graph — the two shapes where a broken convergence rule
-   would either under-iterate (wrong labels) or loop to max_iterations.
+   would either under-iterate (wrong labels) or run into the hop cap.
 2. Retention-grace vacuum (reader-contract shape (b)) for BOTH manifest
    stores: a DataFrame resolved against a superseded manifest still
    scans while the window holds, and dirs beyond the window are still
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -23,6 +24,13 @@ from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
 from kafka_topic_analyzer_spark.sources.tables import load_table
 
 
+def _chain_edges(spark):
+    """A 10-vertex path 0-1-...-9 (diameter 9)."""
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "src long, dst long"
+    )
+
+
 def test_cc_long_chain_needs_multiple_batches(spark):
     """A 10-vertex path has diameter 9: the 2-hop batches must iterate
     several times before the label sum stops moving. Every vertex must
@@ -30,13 +38,22 @@ def test_cc_long_chain_needs_multiple_batches(spark):
     higher labels in the tail of the chain."""
     from kafka_topic_analyzer_spark.operators.dedup import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "src long, dst long"
-    )
     got = {
-        (r["doc_id"], r["cluster_id"]) for r in connected_components(edges).collect()
+        (r["doc_id"], r["cluster_id"])
+        for r in connected_components(_chain_edges(spark)).collect()
     }
     assert got == {(i, 0) for i in range(10)}
+
+
+def test_cc_raises_when_hop_cap_is_hit(spark, monkeypatch):
+    """A chain longer than the hop cap must fail loudly: with 2 hops the
+    last batch still lowers the label sum, and returning those labels
+    would leave the chain's tail in wrong clusters."""
+    from kafka_topic_analyzer_spark.operators import dedup as D
+
+    monkeypatch.setattr(D, "_CC_MAX_HOPS", 2)
+    with pytest.raises(RuntimeError, match="did not converge within 2"):
+        D.connected_components(_chain_edges(spark))
 
 
 def test_cc_two_cliques_and_empty_graph(spark):
@@ -241,23 +258,18 @@ def test_lsh_match_masks_reproduce_every_banding(spark):
         assert via_col == want
 
 
-def test_embedding_lsh_pin_policy_same_pairs(spark):
-    """Above materialize_threshold the LSH bucket relation is pinned and
-    both self-join sides scan the pin (one corpus UDF pass); below it the
-    recompute shape stays. Same pairs either way, and the pinned plan
-    must actually scan the checkpoint (ExistingRDD) instead of
-    re-planning the bucket UDF per side."""
-    from kafka_topic_analyzer_spark.operators.dedup import embedding_near_dups_lsh
+def test_lsh_mask_limits_raise(spark):
+    """The mask is one long: more than 64 permutations would wrap
+    ``shiftleft(1L, p)`` silently, and a banding must split n_perm evenly."""
+    from kafka_topic_analyzer_spark.operators.dedup import (
+        lsh_mask_band_hit,
+        lsh_permutation_match_masks,
+    )
 
-    emb = _emb_base(spark).where(F.col("vec_id") < 200)
-    recompute = embedding_near_dups_lsh(
-        emb, threshold=0.4, tables=4, n_vecs=200
-    )
-    pinned = embedding_near_dups_lsh(
-        emb, threshold=0.4, tables=4, materialize_threshold=10, n_vecs=200
-    )
-    plan = pinned._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan, "bucket pin is gone above the threshold"
-    got_a = sorted(map(tuple, recompute.collect()))
-    got_b = sorted(map(tuple, pinned.collect()))
-    assert got_a == got_b and len(got_a) > 0
+    sigs = spark.range(1).select(F.col("id").alias("doc_id"))
+    with pytest.raises(ValueError, match="n_perm must be at most 64"):
+        lsh_permutation_match_masks(sigs, n_perm=65)
+    with pytest.raises(ValueError, match="n_perm must be at most 64"):
+        lsh_mask_band_hit(F.col("mask"), bands=5, n_perm=65)
+    with pytest.raises(ValueError, match="bands must divide evenly into n_perm"):
+        lsh_mask_band_hit(F.col("mask"), bands=3)

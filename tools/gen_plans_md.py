@@ -197,15 +197,20 @@ SECTIONS: list[tuple[str, str | None, str]] = [
 
 
 def _blocked_builder(spark):
+    from unittest import mock
+
     from pyspark.sql import functions as F
 
-    from kafka_topic_analyzer_spark.operators.dedup import embedding_near_dup_pairs
+    from kafka_topic_analyzer_spark.operators import dedup as D
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    return embedding_near_dup_pairs(emb, threshold=0.4, strategy="blocked")
+    # the fixture is far below the broadcast limit: lower it to plan the
+    # blocked strategy the operator takes on large corpora
+    with mock.patch.object(D, "_MAX_BROADCAST_ROWS", 0):
+        return D.embedding_near_dup_pairs(emb, threshold=0.4)
 
 
 def main() -> None:
