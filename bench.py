@@ -524,10 +524,10 @@ def main() -> None:
     # mass — recall and MEAN probes paid per target fraction, against the
     # same brute-force truth. The blind-constant ladder above pays the
     # same nprobe for hot and sparse cells; this is what the census buys.
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS as IVF_V1_CENTROIDS,
-    )
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.similarity import knn_ivf_adaptive
+
+    IVF_V1_CENTROIDS = artifacts.load("ivf_centroids_v1")
 
     ivf_adaptive = {}
     for tm in (0.125, 0.25, 0.5):
@@ -569,10 +569,9 @@ def main() -> None:
         knn_pq_adc as _knn_pq_adc,
         knn_pq_refined as _knn_pq_refined,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import (
-        CODEBOOKS as _PQ_CB,
-    )
     from pyspark.sql import Window as _W
+
+    _PQ_CB = artifacts.load("pq_codebooks_v1")
 
     t0 = time.perf_counter()
     _q = ivf_queries.select(
@@ -639,16 +638,13 @@ def main() -> None:
     # raw-codebook vs residual-codebook IVF+PQ at the same nprobe: the
     # residual form's recall delta is what training on coarse residuals
     # buys (its tighter mean qerr is pinned by test_pq.py)
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS as _IVF_CB,
-    )
     from kafka_topic_analyzer_spark.operators.pq import (
         knn_ivfpq_adc as _knn_ivfpq_adc,
         knn_ivfpq_residual_adc as _knn_ivfpq_res,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v1 import (
-        CODEBOOKS as _PQ_RES_CB,
-    )
+
+    _IVF_CB = artifacts.load("ivf_centroids_v1")
+    _PQ_RES_CB = artifacts.load("pq_codebooks_res_v1")
 
     for _name, _fn, _cb in (
         ("ivfpq_np4_at_10", _knn_ivfpq_adc, _PQ_CB),
@@ -684,18 +680,11 @@ def main() -> None:
         knn_opq_adc as _knn_opq_adc,
         knn_opq_refined as _knn_opq_refined,
     )
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import (
-        ROTATION as _OPQ_ROT,
-    )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_opq_v1 import (
-        CODEBOOKS as _OPQ_CB,
-    )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v3 import (
-        CODEBOOKS as _PQ_RES_CB3,
-    )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import (
-        CODEBOOKS as _PQ_CB3,
-    )
+
+    _OPQ_ROT = artifacts.load("opq_rotation_v1")
+    _OPQ_CB = artifacts.load("pq_codebooks_opq_v1")
+    _PQ_RES_CB3 = artifacts.load("pq_codebooks_res_v3")
+    _PQ_CB3 = artifacts.load("pq_codebooks_v3")
 
     for _name, _mk in (
         ("adc_v3_at_10", lambda: _knn_pq_adc(emb, ivf_queries, _PQ_CB3, k=10)),
@@ -869,11 +858,10 @@ def main() -> None:
     from kafka_topic_analyzer_spark.operators.sq import (
         knn_ivf_sq8 as _knn_ivf_sq8,
         knn_sq8 as _knn_sq8,
-        load_sq8_params as _load_sq8,
         sq8_encode as _sq8_encode,
     )
 
-    _SQ8_RANGES = _load_sq8(1)
+    _SQ8_RANGES = artifacts.load("sq8_params_v1")
     for _name, _mk in (
         (
             "adc_packed_at_10",
@@ -1020,34 +1008,34 @@ def main() -> None:
 
     # Quantizer re-cut loop evidence (judge r9 item 7): the canonical
     # drifted corpus (v -> 0.6v + 0.5) under the serving v1 artifact vs
-    # the committed re-cut v2 (tools/ivf_recut.py). Two assignment scans
+    # the committed re-cut v2 (tools/recut.py ivf). Two assignment scans
     # + nlist-row summaries; the skew drop IS the re-cut's value.
-    from kafka_topic_analyzer_spark.operators.similarity import (
-        load_quantizer,
-        quantizer_occupancy,
-    )
+    from kafka_topic_analyzer_spark.operators.similarity import quantizer_occupancy
 
     drifted_emb = emb.withColumn(
         "embedding", F.expr("transform(embedding, x -> CAST(0.6*x + 0.5 AS FLOAT))")
     )
     ivf_recut = {
         "drift": "v -> 0.6v + 0.5",
-        "before_v1": quantizer_occupancy(drifted_emb, load_quantizer(1)),
-        "after_v2": quantizer_occupancy(drifted_emb, load_quantizer(2)),
+        "before_v1": quantizer_occupancy(
+            drifted_emb, artifacts.load("ivf_centroids_v1")
+        ),
+        "after_v2": quantizer_occupancy(
+            drifted_emb, artifacts.load("ivf_centroids_v2")
+        ),
     }
 
     # The PQ codebook twin of the re-cut evidence: dead-code capacity and
     # mean quantization error on the SAME drifted corpus under serving v1
-    # vs the committed re-cut v2 (tools/pq_recut.py).
+    # vs the committed re-cut v2 (tools/recut.py pq).
     from kafka_topic_analyzer_spark.operators.pq import (
-        load_codebooks as _load_pq,
         pq_codebook_health as _pq_health,
     )
 
     pq_recut = {
         "drift": "v -> 0.6v + 0.5",
-        "before_v1": _pq_health(drifted_emb, _load_pq(1)),
-        "after_v2": _pq_health(drifted_emb, _load_pq(2)),
+        "before_v1": _pq_health(drifted_emb, artifacts.load("pq_codebooks_v1")),
+        "after_v2": _pq_health(drifted_emb, artifacts.load("pq_codebooks_v2")),
     }
 
     # Z-order PAYOFF (not just layout): write the Morton frame both ways —
@@ -1225,13 +1213,10 @@ def main() -> None:
     from kafka_topic_analyzer_spark.functions.vectors import (
         as_double as _as_double,
     )
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS as _IU_CENTS,
-    )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import (
-        CODEBOOKS as _IU_CB,
-    )
     from kafka_topic_analyzer_spark.streaming import index_upsert as _IU
+
+    _IU_CENTS = artifacts.load("ivf_centroids_v1")
+    _IU_CB = artifacts.load("pq_codebooks_v1")
 
     _emb_base = emb.select(
         "vec_id", _as_double(F.col("embedding")).alias("embedding")

@@ -67,6 +67,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--streaming", action="store_true",
                     help="run the report as a bounded streaming query")
     args = ap.parse_args(argv)
+    if args.streaming and not args.parquet_fixture:
+        ap.error("--streaming needs --parquet-fixture")
 
     from kafka_topic_analyzer_spark.operators.alive_keys import alive_key_count
     from kafka_topic_analyzer_spark.operators.report import (
@@ -100,10 +102,9 @@ def main(argv: list[str] | None = None) -> int:
         guard_empty_topic(kdf, exit_on_empty=True)
     else:
         ap.error("need --bootstrap-server or --parquet-fixture")
-        return 2
 
     kdf = kdf.cache()  # two jobs (report + alive keys) share one scan
-    if args.streaming and args.parquet_fixture:
+    if args.streaming:
         from kafka_topic_analyzer_spark.streaming.report_stream import (
             streaming_partition_report,
         )

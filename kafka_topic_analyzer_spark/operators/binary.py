@@ -13,7 +13,7 @@ IndexRefineFlat-over-binary pattern FAISS uses.
 Thresholds derive from the serving SQ8 range artifact (per-dim midpoint
 (lo+hi)/2), so the binary rung inherits the SQ8 train/serve lifecycle —
 range drift that saturates SQ8 codes equally degrades bit balance, and
-the same re-cut (tools/sq8_recut.py) refreshes both. The per-dim bit
+the same re-cut (tools/recut.py sq8) refreshes both. The per-dim bit
 balance (:mod:`queries.similarity` binary_bit_balance_audit) is the
 quality signal: a balanced bit carries maximal information; a dim whose
 bit is ~always 0 or ~always 1 contributes nothing to the hamming

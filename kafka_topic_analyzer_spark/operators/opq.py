@@ -12,7 +12,7 @@ allocation": eigen-decompose the training covariance, then greedily
 assign eigen-directions to the M subspaces balancing the per-subspace
 log-variance product (the allocation objective from the OPQ paper's
 non-parametric init). The rotation is a versioned train/serve artifact
-(tools/train_opq.py -> operators/opq_rotation_v1.py) exactly like the
+(tools/train_opq.py -> ``opq_rotation_v1``, operators/artifacts.py) like the
 IVF centroids and PQ codebooks; serving applies it as a deterministic
 sequential-fold matmul that the DuckDB oracle reproduces bit-for-bit
 (same discipline as functions/vectors._DOT), so the full OPQ->PQ->ADC

@@ -14,7 +14,8 @@ raw vectors.
 Train/serve split mirrors the IVF quantizer lifecycle
 (operators/similarity.py): :func:`pq_train` runs deterministic per-
 subspace Lloyd k-means on a bounded sample (tools/train_pq_codebooks.py
-ships the result as the versioned artifact operators/pq_codebooks_v1.py);
+ships the result as the versioned artifact ``pq_codebooks_v1``, read
+through operators/artifacts.py);
 encoding and search only ever see FIXED codebooks, which is what makes
 the whole path DuckDB-mirrorable: subspace distances are the identical
 sequential IEEE-754 fold on both engines, per-term scores are tie-safe-
@@ -798,18 +799,6 @@ def knn_ivfpq_adaptive(
 # ---------------------------------------------------------------------------
 
 
-def load_codebooks(version: int = 1, residual: bool = False) -> Codebooks:
-    """Load a versioned checked-in codebook artifact
-    (operators/pq_codebooks_{res_}v{version}.py)."""
-    import importlib
-
-    stem = "pq_codebooks_res_v" if residual else "pq_codebooks_v"
-    mod = importlib.import_module(
-        f"kafka_topic_analyzer_spark.operators.{stem}{version}"
-    )
-    return mod.CODEBOOKS
-
-
 def pq_codebook_health(df: DataFrame, codebooks: Codebooks) -> dict:
     """Codebook-health stats of ``df`` under FIXED codebooks — the re-cut
     trigger. One distributed encode scan (the serving path's exact math)
@@ -849,7 +838,7 @@ def maybe_recut_codebooks(
     codebooks on the current corpus (:func:`pq_train` — bounded
     deterministic sample) and return ``(new, before, after)``; otherwise
     ``(None, before, None)``. The serving codebooks are NEVER mutated in
-    place (tools/pq_recut.py writes the next versioned module).
+    place (tools/recut.py pq writes the next versioned artifact).
 
     Measured on the probe's canonical drift (v -> 0.6v + 0.5) at sf0.01:
     v1 serves 104/128 dead codes (dead_frac 0.81) with mean_qerr 13.63;

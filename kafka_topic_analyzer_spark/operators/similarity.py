@@ -416,11 +416,12 @@ def knn_ivf(
 # IVF against a FIXED (checked-in) quantizer — the serving-time IVF shape.
 # Production IVF separates training from search: the quantizer is a
 # versioned artifact (FAISS ships it with the index), and search only ever
-# sees fixed centroids. operators/ivf_centroids_v1.py holds such an
-# artifact (generated by tools/train_ivf_centroids.py via ivf_centroids);
-# with the centroids fixed and the similarity computed as a sequential
-# fold, the whole search path is DuckDB-mirrorable — unlike the trained
-# path above, whose np.mean centroid updates use pairwise summation.
+# sees fixed centroids. The ``ivf_centroids_v1`` artifact
+# (operators/artifacts.py) is one, generated by
+# tools/train_ivf_centroids.py via ivf_centroids; with the centroids
+# fixed and the similarity computed as a sequential fold, the whole
+# search path is DuckDB-mirrorable — unlike the trained path above, whose
+# np.mean centroid updates use pairwise summation.
 # ---------------------------------------------------------------------------
 
 
@@ -750,17 +751,6 @@ def knn_ivf_adaptive(
 # ---------------------------------------------------------------------------
 
 
-def load_quantizer(version: int = 1) -> tuple[tuple[float, ...], ...]:
-    """Load a versioned checked-in quantizer artifact
-    (operators/ivf_centroids_v{version}.py)."""
-    import importlib
-
-    mod = importlib.import_module(
-        f"kafka_topic_analyzer_spark.operators.ivf_centroids_v{version}"
-    )
-    return mod.CENTROIDS
-
-
 def quantizer_occupancy(
     df: DataFrame, centroids: tuple[tuple[float, ...], ...]
 ) -> dict:
@@ -798,8 +788,8 @@ def maybe_recut_quantizer(
     (:func:`ivf_centroids` — bounded deterministic sample) and return
     ``(new_centroids, before, after)``; otherwise ``(None, before, None)``.
 
-    The caller decides shipment (tools/ivf_recut.py writes the next
-    versioned artifact module); the serving quantizer is NEVER mutated in
+    The caller decides shipment (tools/recut.py ivf writes the next
+    versioned artifact); the serving quantizer is NEVER mutated in
     place — searches against v_n stay reproducible while v_{n+1} rolls out.
     Measured on the probe's canonical drift (v -> 0.6v + 0.5): skew 14.9
     with 11/16 dead cells under v1, 1.25 and 0 dead after the re-cut

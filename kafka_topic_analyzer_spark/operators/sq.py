@@ -11,12 +11,13 @@ accurate enough to skip the refine pass for most workloads.
 
 Train/serve split mirrors the IVF/PQ lifecycle: :func:`sq8_train`
 derives per-dim min/max from a bounded deterministic sample
-(tools/train_sq8_params.py ships operators/sq8_params_v1.py); encode and
-search only ever see the FIXED ranges. Everything is pure JVM column
-expressions (transform/aggregate over array columns — no Python in the
-hot path), and every arithmetic step is elementwise with per-term
-tie-safe rounding to integer micro-units, so the DuckDB oracle
-reproduces codes and distances bit-for-bit in any evaluation order.
+(tools/train_sq8_params.py ships the ``sq8_params_v1`` artifact,
+operators/artifacts.py); encode and search only ever see the FIXED
+ranges. Everything is pure JVM column expressions (transform/aggregate
+over array columns — no Python in the hot path), and every arithmetic
+step is elementwise with per-term tie-safe rounding to integer
+micro-units, so the DuckDB oracle reproduces codes and distances
+bit-for-bit in any evaluation order.
 
 The saturation census (:func:`sq8_saturation_health` / the registered
 sq8_saturation_audit query) is the drift trigger: codes pinned at 0/255
@@ -195,17 +196,6 @@ def knn_sq8(
     )
 
 
-def load_sq8_params(version: int = 1) -> Ranges:
-    """Load a versioned checked-in SQ8 range artifact
-    (operators/sq8_params_v{version}.py)."""
-    import importlib
-
-    mod = importlib.import_module(
-        f"kafka_topic_analyzer_spark.operators.sq8_params_v{version}"
-    )
-    return (mod.LO, mod.HI)
-
-
 # ---------------------------------------------------------------------------
 # Range lifecycle: saturation trigger -> re-derive -> versioned artifact.
 # sq8_saturation_audit (and its streaming twin) MEASURE the signal; these
@@ -259,7 +249,7 @@ def maybe_recut_sq8(
     ranges from the current corpus (:func:`sq8_train` — bounded
     deterministic sample) and return ``(new, before, after)``; otherwise
     ``(None, before, None)``. The serving ranges are NEVER mutated in
-    place (tools/sq8_recut.py writes the next versioned module). An
+    place (tools/recut.py sq8 writes the next versioned artifact). An
     in-range corpus saturates only AT its per-dim extremes (the min/max
     rows themselves encode 0/255), so the healthy floor is ~2/255 per
     dim, far under any sensible bar."""

@@ -5,17 +5,17 @@ oracle-matched: every engine does the identical sequential double fold
 (Spark ``aggregate`` / sequential numpy accumulation == DuckDB
 ``list_reduce``); LSH hyperplanes are fixed integer hashes and the IVF
 coarse quantizer is a checked-in training artifact
-(operators/ivf_centroids_v1.py, FAISS-style train/serve split), so
-cells, buckets, candidates and rounded scores all hash-match. Only the
-in-training k-means itself stays non-SQL (BLAS pairwise ``np.mean``) —
-exercised by unit tests, not the registry.
+(``ivf_centroids_v1``, operators/artifacts.py — FAISS-style train/serve
+split), so cells, buckets, candidates and rounded scores all hash-match.
+Only the in-training k-means itself stays non-SQL (BLAS pairwise
+``np.mean``) — exercised by unit tests, not the registry.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from kafka_topic_analyzer_spark.operators import similarity as S
+from kafka_topic_analyzer_spark.operators import artifacts, similarity as S
 from kafka_topic_analyzer_spark.registry import register
 from kafka_topic_analyzer_spark.sources.tables import load_table
 
@@ -149,11 +149,11 @@ IVF_NPROBE = 4
 def _knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search against the checked-in quantizer artifact (train/serve
     split — training itself is unit-tested via operators knn_ivf)."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    centroids = artifacts.load("ivf_centroids_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return S.knn_ivf_fixed(emb, queries, CENTROIDS, k=TOP_K, nprobe=IVF_NPROBE)
+    return S.knn_ivf_fixed(emb, queries, centroids, k=TOP_K, nprobe=IVF_NPROBE)
 
 
 def _centroid_list_sql(row: tuple[float, ...]) -> str:
@@ -164,14 +164,15 @@ def _ivf_sim_sql(ci: int) -> str:
     """Fold-deterministic cosine of ``embedding`` against fixed centroid
     ``ci`` (qn precomputed in the base CTE; centroid norm inlined via the
     identical scalar fold — operators/similarity.centroid_norms)."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.similarity import centroid_norms
 
-    cn = centroid_norms(CENTROIDS)[ci]
+    centroids = artifacts.load("ivf_centroids_v1")
+
+    cn = centroid_norms(centroids)[ci]
     if not cn > 0:  # degenerate centroid scores 0 everywhere (numpy `ok`)
         return "CAST(0 AS DOUBLE)"
     dot = f"""list_reduce(list_prepend(CAST(0 AS DOUBLE),
-      list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * ({_centroid_list_sql(CENTROIDS[ci])})[i])),
+      list_transform(embedding, (x, i) -> CAST(x AS DOUBLE) * ({_centroid_list_sql(centroids[ci])})[i])),
       (acc, x) -> acc + x)"""
     return f"CASE WHEN qn > 0 THEN {dot} / (qn * {repr(cn)}) ELSE CAST(0 AS DOUBLE) END"
 
@@ -180,10 +181,10 @@ def _knn_ivf_sql() -> str:
     """Full oracle: the fixed quantizer makes cell assignment pure SQL —
     16 fold-computed sims per vector, top-nprobe by (sim DESC, cell ASC)
     — then the candidate join and exact re-rank mirror the LSH oracle."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -246,12 +247,12 @@ def _knn_ivf_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors. The census is the same per-cell table the streaming
     ingest (ivf_cell_postings_streaming) maintains online; here it is
     derived in-plan from the identical batch assignment."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    centroids = artifacts.load("ivf_centroids_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return S.knn_ivf_adaptive(
-        emb, queries, CENTROIDS, k=TOP_K, target_mass=IVF_TARGET_MASS
+        emb, queries, centroids, k=TOP_K, target_mass=IVF_TARGET_MASS
     )
 
 
@@ -260,10 +261,10 @@ def _knn_ivf_adaptive_sql() -> str:
     DESC / cell ASC), postings census from the rk=1 assignment, running
     mass over probe rank, the identical smallest-prefix rule, then the
     same candidate join + exact re-rank."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -356,13 +357,11 @@ def _ivf_quantizer_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
       quantization-error ratio — rises as the corpus moves away from
       the training distribution. Decimal-exact mean (parity rules).
     """
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS,
-        NLIST,
-    )
+    centroids = artifacts.load("ivf_centroids_v1")
+    nlist = len(centroids)
 
     emb = load_table(spark, sf_dir, "embeddings")
-    assigned = S.ivf_assign_fixed_scored(emb, CENTROIDS)
+    assigned = S.ivf_assign_fixed_scored(emb, centroids)
     per_cell = (
         assigned.select("cell", F.round(F.col("sim"), 6).alias("sim_r"))
         .withColumn(
@@ -374,11 +373,11 @@ def _ivf_quantizer_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return per_cell.agg(
         F.sum("n").cast("long").alias("n_vecs"),
-        F.lit(NLIST).cast("int").alias("n_cells"),
-        (F.lit(NLIST) - F.count(F.lit(1))).cast("long").alias("n_empty_cells"),
+        F.lit(nlist).cast("int").alias("n_cells"),
+        (F.lit(nlist) - F.count(F.lit(1))).cast("long").alias("n_empty_cells"),
         F.max("n").cast("long").alias("max_occupancy"),
         F.round(
-            F.max("n").cast("double") * NLIST / F.sum("n"), 6
+            F.max("n").cast("double") * nlist / F.sum("n"), 6
         ).alias("occupancy_skew"),
         F.round(
             F.sum("errs").cast("double") / F.sum("n"), 6
@@ -390,10 +389,10 @@ def _ivf_drift_audit_sql() -> str:
     """Oracle: the same 16 fold-computed sims per vector as the
     knn_ivf_cosine oracle, rk=1 assignment, then the identical
     decimal-exact aggregate sequence."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -417,10 +416,10 @@ per_cell AS (
   FROM best GROUP BY cell
 )
 SELECT CAST(sum(n) AS BIGINT) AS n_vecs,
-       CAST({NLIST} AS INT) AS n_cells,
-       CAST({NLIST} - count(*) AS BIGINT) AS n_empty_cells,
+       CAST({nlist} AS INT) AS n_cells,
+       CAST({nlist} - count(*) AS BIGINT) AS n_empty_cells,
        CAST(max(n) AS BIGINT) AS max_occupancy,
-       round(CAST(max(n) AS DOUBLE) * {NLIST} / sum(n), 6) AS occupancy_skew,
+       round(CAST(max(n) AS DOUBLE) * {nlist} / sum(n), 6) AS occupancy_skew,
        round(CAST(sum(errs) AS DOUBLE) / sum(n), 6) AS mean_quant_err
 FROM per_cell
 """
@@ -449,10 +448,10 @@ def _ivf_cell_postings_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_postings_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -1249,7 +1248,7 @@ LIMIT {OUTLIER_TOP_K}
 
 # ---------------------------------------------------------------------------
 # Product quantization (operators/pq.py) — the compressed-domain ANN rung.
-# Codebooks are a checked-in training artifact (operators/pq_codebooks_v1.py,
+# Codebooks are a checked-in training artifact (``pq_codebooks_v1``,
 # tools/train_pq_codebooks.py — the same train/serve split as the IVF
 # quantizer), so encoding and ADC search are fully DuckDB-mirrorable:
 # subspace distances are the identical sequential fold on both engines,
@@ -1264,9 +1263,7 @@ def _pq_dist_sql(mi: int, ki: int, emb: str = "embedding", cb=None) -> str:
     operators/pq._pq_parts_udf. ``cb`` defaults to the raw-vector v1
     codebooks; the residual query passes the residual artifact."""
     if cb is None:
-        from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
-
-        cb = CODEBOOKS
+        cb = artifacts.load("pq_codebooks_v1")
     dsub = len(cb[0][0])
     terms = []
     for j, c in enumerate(cb[mi][ki]):
@@ -1278,12 +1275,13 @@ def _pq_dist_sql(mi: int, ki: int, emb: str = "embedding", cb=None) -> str:
 def _pq_parts_structs() -> str:
     """All M*K (m, k, d) structs for one vector — the unnest body the
     codes/census CTEs rank per (vec, m)."""
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import K, M
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
 
     return ", ".join(
         f"{{'m': {mi}, 'k': {ki}, 'd': {_pq_dist_sql(mi, ki)}}}"
-        for mi in range(M)
-        for ki in range(K)
+        for mi in range(m_sub)
+        for ki in range(k_codes)
     )
 
 
@@ -1308,22 +1306,26 @@ def _pq_qdt_sql() -> str:
     each entry tie-safe-rounded to 6 dp and cast DECIMAL(18,6) — the
     mirror of the per-term rounding operators/pq._adc_dist applies after
     lookup; rounding is elementwise so the order doesn't matter)."""
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import K, M
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
 
     entries = ", ".join(
         f"CAST(floor({_pq_dist_sql(mi, ki)} * 1e6 + 0.5) / 1e6 AS DECIMAL(18,6))"
-        for mi in range(M)
-        for ki in range(K)
+        for mi in range(m_sub)
+        for ki in range(k_codes)
     )
     return f"[{entries}]"
 
 
-def _pq_adc_sum_sql() -> str:
+def _pq_adc_sum_sql(version: str) -> str:
     """The M-term ADC lookup sum over ``qdt`` (query table) and ``codes``
-    (candidate codes) — DuckDB lists are 1-based."""
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import K, M
-
-    return " + ".join(f"qdt[{mi * K} + codes[{mi + 1}] + 1]" for mi in range(M))
+    (candidate codes) under codebooks ``pq_codebooks_{version}`` — DuckDB
+    lists are 1-based."""
+    codebooks = artifacts.load(f"pq_codebooks_{version}")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
+    return " + ".join(
+        f"qdt[{mi * k_codes} + codes[{mi + 1}] + 1]" for mi in range(m_sub)
+    )
 
 
 def _pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,10 +1341,12 @@ def _pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the aggregate. Decimal-exact error sums (parity rules).
     """
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS, K, M
+
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
 
     emb = load_table(spark, sf_dir, "embeddings")
-    enc = PQ.pq_encode_scored(emb, CODEBOOKS)
+    enc = PQ.pq_encode_scored(emb, codebooks)
     pairs = enc.select(
         F.posexplode(F.arrays_zip("codes", "qerrs")).alias("m", "z")
     ).select(
@@ -1358,9 +1362,11 @@ def _pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("qerr").alias("maxe"),
     )
     spine = (
-        spark.range(M)
+        spark.range(m_sub)
         .select(F.col("id").cast("int").alias("m"))
-        .crossJoin(spark.range(K).select(F.col("id").cast("int").alias("code")))
+        .crossJoin(
+            spark.range(k_codes).select(F.col("id").cast("int").alias("code"))
+        )
     )
     return (
         spine.join(census, ["m", "code"], "left")
@@ -1383,7 +1389,8 @@ def _pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_code_census_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import K, M
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
 
     return f"""
 WITH {_pq_codes_ctes().split("codes AS")[0]}
@@ -1401,7 +1408,7 @@ census AS (
 ),
 spine AS (
   SELECT CAST(t1.range AS INT) AS m, CAST(t2.range AS INT) AS code
-  FROM range(0, {M}) t1, range(0, {K}) t2
+  FROM range(0, {m_sub}) t1, range(0, {k_codes}) t2
 )
 SELECT spine.m, spine.code,
        CAST(COALESCE(n_assigned, 0) AS BIGINT) AS n_assigned,
@@ -1427,12 +1434,13 @@ def _knn_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings (operators/pq.knn_pq_refined docstring has the measured
     recall ladder)."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
+
+    codebooks = artifacts.load("pq_codebooks_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return PQ.knn_pq_refined(
-        emb, queries, CODEBOOKS, k=TOP_K, shortlist=PQ_SHORTLIST
+        emb, queries, codebooks, k=TOP_K, shortlist=PQ_SHORTLIST
     )
 
 
@@ -1450,7 +1458,7 @@ qdt AS (
 ),
 adc AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_pq_adc_sum_sql()} AS adist_dec
+         {_pq_adc_sum_sql("v1")} AS adist_dec
   FROM codes c CROSS JOIN qdt
   WHERE c.vec_id <> query_id
 ),
@@ -1521,11 +1529,11 @@ def _centroid_case_sql(cell_col: str) -> str:
     """The coarse centroid as a list literal selected by a 16-way CASE on
     ``cell_col`` — the SQL form of numpy's c[cells] row pick in the
     residual UDF."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    centroids = artifacts.load("ivf_centroids_v1")
 
     whens = " ".join(
-        f"WHEN {ci} THEN {_centroid_list_sql(CENTROIDS[ci])}"
-        for ci in range(len(CENTROIDS))
+        f"WHEN {ci} THEN {_centroid_list_sql(centroids[ci])}"
+        for ci in range(len(centroids))
     )
     return f"(CASE {cell_col} {whens} END)"
 
@@ -1536,19 +1544,17 @@ def _pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving codebook artifact and report the re-cut trigger statistics —
     dead codes (capacity the corpus can no longer reach) and the
     decimal-exact mean per-vector summed quantization error (rises as
-    the corpus drifts off the training distribution). tools/pq_recut.py
-    acts on this signal; pq_codebooks_v2.py is the committed example.
+    the corpus drifts off the training distribution). tools/recut.py pq
+    acts on this signal; ``pq_codebooks_v2`` is the committed example.
 
     One encode scan, M*K-sized groupBy, 1-row summary."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import (
-        CODEBOOKS,
-        K,
-        M,
-    )
+
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, n_codes = len(codebooks), len(codebooks) * len(codebooks[0])
 
     emb = load_table(spark, sf_dir, "embeddings")
-    enc = PQ.pq_encode_scored(emb, CODEBOOKS)
+    enc = PQ.pq_encode_scored(emb, codebooks)
     pairs = enc.select(
         F.posexplode(F.arrays_zip("codes", "qerrs")).alias("m", "z")
     ).select(
@@ -1569,20 +1575,21 @@ def _pq_codebook_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
 
     return per_code.agg(
-        (F.sum("n") / F.lit(M)).cast("long").alias("n_vecs"),
-        F.lit(M * K).cast("int").alias("n_codes"),
-        (F.lit(M * K) - F.count(F.lit(1))).cast("long").alias("n_dead_codes"),
+        (F.sum("n") / F.lit(m_sub)).cast("long").alias("n_vecs"),
+        F.lit(n_codes).cast("int").alias("n_codes"),
+        (F.lit(n_codes) - F.count(F.lit(1))).cast("long").alias("n_dead_codes"),
         r6(
-            (F.lit(M * K) - F.count(F.lit(1))).cast("double") / F.lit(M * K)
+            (F.lit(n_codes) - F.count(F.lit(1))).cast("double") / F.lit(n_codes)
         ).alias("dead_frac"),
         r6(
-            F.sum("errs").cast("double") / (F.sum("n") / F.lit(M))
+            F.sum("errs").cast("double") / (F.sum("n") / F.lit(m_sub))
         ).alias("mean_qerr"),
     )
 
 
 def _pq_drift_audit_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import K, M
+    codebooks = artifacts.load("pq_codebooks_v1")
+    m_sub, n_codes = len(codebooks), len(codebooks) * len(codebooks[0])
 
     return f"""
 WITH {_pq_codes_ctes().split("codes AS")[0]}
@@ -1595,12 +1602,12 @@ per_code AS (
   SELECT m, k, CAST(count(*) AS BIGINT) AS n, sum(qerr) AS errs
   FROM rounded GROUP BY m, k
 )
-SELECT CAST(sum(n) / {M} AS BIGINT) AS n_vecs,
-       CAST({M * K} AS INT) AS n_codes,
-       CAST({M * K} - count(*) AS BIGINT) AS n_dead_codes,
-       floor((CAST({M * K} - count(*) AS DOUBLE) / {M * K}) * 1e6 + 0.5) / 1e6
+SELECT CAST(sum(n) / {m_sub} AS BIGINT) AS n_vecs,
+       CAST({n_codes} AS INT) AS n_codes,
+       CAST({n_codes} - count(*) AS BIGINT) AS n_dead_codes,
+       floor((CAST({n_codes} - count(*) AS DOUBLE) / {n_codes}) * 1e6 + 0.5) / 1e6
          AS dead_frac,
-       floor((CAST(sum(errs) AS DOUBLE) / (sum(n) / {M})) * 1e6 + 0.5) / 1e6
+       floor((CAST(sum(errs) AS DOUBLE) / (sum(n) / {m_sub})) * 1e6 + 0.5) / 1e6
          AS mean_qerr
 FROM per_code
 """
@@ -1622,13 +1629,14 @@ def _knn_ivfpq_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe_used is in the hashed output, so the driver verifies the
     selection rule itself."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return PQ.knn_ivfpq_adaptive(
-        emb, queries, CENTROIDS, CODEBOOKS, k=TOP_K, target_mass=IVF_TARGET_MASS
+        emb, queries, centroids, codebooks, k=TOP_K, target_mass=IVF_TARGET_MASS
     )
 
 
@@ -1636,10 +1644,10 @@ def _knn_ivfpq_adaptive_sql() -> str:
     """Oracle: the ivf_adaptive census/smallest-prefix CTEs (postings from
     the rk=1 assignment — identical to the IVF+PQ index's cells) + the PQ
     codes/qdt CTEs, ADC-scored over the selected cells."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -1685,7 +1693,7 @@ qdt AS (
   FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
 scored AS (
-  SELECT query_id, neighbor_id, {_pq_adc_sum_sql()} AS adist_dec
+  SELECT query_id, neighbor_id, {_pq_adc_sum_sql("v1")} AS adist_dec
   FROM cb JOIN sel USING (cell)
   JOIN codes c ON c.vec_id = neighbor_id
   JOIN qdt USING (query_id)
@@ -1714,8 +1722,8 @@ register(
 
 # ---------------------------------------------------------------------------
 # Scalar quantization (operators/sq.py) — the middle compression rung:
-# per-dim 8-bit codes against FIXED [lo, hi] ranges (operators/
-# sq8_params_v1.py, tools/train_sq8_params.py — the same train/serve
+# per-dim 8-bit codes against FIXED [lo, hi] ranges (``sq8_params_v1``,
+# tools/train_sq8_params.py — the same train/serve
 # artifact lifecycle). Everything is elementwise arithmetic with per-term
 # tie-safe integer micro-unit rounding, so codes and distances are
 # DuckDB-mirrorable in any evaluation order.
@@ -1728,9 +1736,7 @@ def _sq_list(vals) -> str:
 
 def _sq8_codes_sql(emb: str = "embedding") -> str:
     """DuckDB mirror of operators/sq.sq8_encode_expr (1-based lambda i)."""
-    from kafka_topic_analyzer_spark.operators.sq8_params_v1 import HI, LO
-
-    lo, hi = _sq_list(LO), _sq_list(HI)
+    lo, hi = (_sq_list(v) for v in artifacts.load("sq8_params_v1"))
     return f"""list_transform({emb}, (x, i) -> CAST(
       CASE WHEN {hi}[i] > {lo}[i]
            THEN least(255, greatest(0, CAST(floor(
@@ -1741,9 +1747,7 @@ def _sq8_codes_sql(emb: str = "embedding") -> str:
 
 def _sq8_terms_sql(codes: str, vec: str) -> str:
     """DuckDB mirror of operators/sq.sq8_terms_expr."""
-    from kafka_topic_analyzer_spark.operators.sq8_params_v1 import HI, LO
-
-    lo, hi = _sq_list(LO), _sq_list(HI)
+    lo, hi = (_sq_list(v) for v in artifacts.load("sq8_params_v1"))
     deq = f"({lo}[i] + CAST(c AS DOUBLE) * ({hi}[i] - {lo}[i]) / 255.0)"
     diff = f"(CAST({vec}[i] AS DOUBLE) - {deq})"
     return (
@@ -1757,11 +1761,11 @@ def _knn_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the raw query (asymmetric — only the candidate grid loses
     precision). The middle compression rung: 4x smaller than float32
     with near-exact ranking, no refine pass needed for most workloads."""
-    from kafka_topic_analyzer_spark.operators.sq import knn_sq8, load_sq8_params
+    from kafka_topic_analyzer_spark.operators.sq import knn_sq8
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return knn_sq8(emb, queries, load_sq8_params(1), k=TOP_K)
+    return knn_sq8(emb, queries, artifacts.load("sq8_params_v1"), k=TOP_K)
 
 
 def _knn_sq8_sql() -> str:
@@ -1800,13 +1804,9 @@ def _sq8_saturation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction-error sum. The re-cut trigger for
     tools/train_sq8_params.py. One encode scan, a dim-sized aggregate;
     sums stay integers so no rounding enters the hash."""
-    from kafka_topic_analyzer_spark.operators.sq import (
-        load_sq8_params,
-        sq8_encode_expr,
-        sq8_terms_expr,
-    )
+    from kafka_topic_analyzer_spark.operators.sq import sq8_encode_expr, sq8_terms_expr
 
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     emb = load_table(spark, sf_dir, "embeddings")
     enc = emb.withColumn("codes", F.expr(sq8_encode_expr(ranges))).withColumn(
         "terms", F.expr(sq8_terms_expr(ranges, "codes", "embedding"))
@@ -1884,21 +1884,21 @@ def _knn_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune candidates, SQ8 scores the survivors from 8-bit codes —
     completing the coarse x fine matrix next to IVF+PQ, with near-exact
     scoring (per-dim grid error only) so no refine pass is needed."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.sq import knn_ivf_sq8, load_sq8_params
+    from kafka_topic_analyzer_spark.operators.sq import knn_ivf_sq8
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    ranges = artifacts.load("sq8_params_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return knn_ivf_sq8(
-        emb, queries, CENTROIDS, load_sq8_params(1), k=TOP_K, nprobe=IVF_NPROBE
-    )
+    return knn_ivf_sq8(emb, queries, centroids, ranges, k=TOP_K, nprobe=IVF_NPROBE)
 
 
 def _knn_ivf_sq8_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     dist = f"""list_reduce(list_prepend(CAST(0 AS BIGINT),
       {_sq8_terms_sql("idx.codes", "q.q_emb")}),
@@ -1962,11 +1962,11 @@ def _ivfpq_index_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_index_streaming_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import M
+    nlist = len(artifacts.load("ivf_centroids_v1"))
+    m_sub = len(artifacts.load("pq_codebooks_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     # Top lane (bits 56..63) without a raw shift: DuckDB's CHECKED <<
     # rejects c << 56 for c >= 128 (signed-64 overflow), while Spark's
@@ -1981,7 +1981,7 @@ def _ivfpq_index_streaming_sql() -> str:
             f" + CASE WHEN codes[{mi + 1}] >= 128"
             f" THEN -9223372036854775808 ELSE 0 END)"
         )
-        for mi in range(M)
+        for mi in range(m_sub)
     )
     return f"""
 WITH base AS (
@@ -2029,11 +2029,10 @@ def _knn_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hamming over 64 bits has 65 values; ties on neighbor_id), so the
     deployment pairs it with the refine twin below."""
     from kafka_topic_analyzer_spark.operators.binary import knn_binary_hamming
-    from kafka_topic_analyzer_spark.operators.sq import load_sq8_params
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return knn_binary_hamming(emb, queries, load_sq8_params(1), k=TOP_K)
+    return knn_binary_hamming(emb, queries, artifacts.load("sq8_params_v1"), k=TOP_K)
 
 
 def _binary_codes_cte() -> str:
@@ -2041,9 +2040,8 @@ def _binary_codes_cte() -> str:
         binary_encode_sql,
         binary_thresholds,
     )
-    from kafka_topic_analyzer_spark.operators.sq import load_sq8_params
 
-    thr = binary_thresholds(load_sq8_params(1))
+    thr = binary_thresholds(artifacts.load("sq8_params_v1"))
     return binary_encode_sql(thr)
 
 
@@ -2079,12 +2077,11 @@ def _knn_binary_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment shape: the 8-byte scan proposes, raw vectors are read for
     shortlist x queries rows only."""
     from kafka_topic_analyzer_spark.operators.binary import knn_binary_refined
-    from kafka_topic_analyzer_spark.operators.sq import load_sq8_params
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return knn_binary_refined(
-        emb, queries, load_sq8_params(1), k=TOP_K, shortlist=PQ_SHORTLIST
+        emb, queries, artifacts.load("sq8_params_v1"), k=TOP_K, shortlist=PQ_SHORTLIST
     )
 
 
@@ -2143,9 +2140,8 @@ def _binary_bit_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same re-cut refreshes both. One scan, a dim-sized aggregate,
     integer-exact output."""
     from kafka_topic_analyzer_spark.operators.binary import binary_thresholds
-    from kafka_topic_analyzer_spark.operators.sq import load_sq8_params
 
-    thr = binary_thresholds(load_sq8_params(1))
+    thr = binary_thresholds(artifacts.load("sq8_params_v1"))
     thr_arr = "array(" + ", ".join(f"CAST({t!r} AS DOUBLE)" for t in thr) + ")"
     bits = (
         f"transform(embedding, (x, i) -> CASE WHEN CAST(x AS DOUBLE)"
@@ -2168,9 +2164,8 @@ def _binary_bit_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _binary_bit_balance_sql() -> str:
     from kafka_topic_analyzer_spark.operators.binary import binary_thresholds
-    from kafka_topic_analyzer_spark.operators.sq import load_sq8_params
 
-    thr = binary_thresholds(load_sq8_params(1))
+    thr = binary_thresholds(artifacts.load("sq8_params_v1"))
     thr_l = "[" + ", ".join(repr(t) for t in thr) + "]"
     bits = (
         f"list_transform(embedding, (x, i) -> CASE WHEN CAST(x AS DOUBLE)"
@@ -2203,20 +2198,20 @@ def _knn_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     is computed, so the filter multiplies with the cell pruning instead
     of post-filtering a ranked list (which silently under-fills k for
     selective filters)."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    centroids = artifacts.load("ivf_centroids_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return S.knn_ivf_filtered(
-        emb, queries, CENTROIDS, k=TOP_K, nprobe=IVF_NPROBE, filter_col="label"
+        emb, queries, centroids, k=TOP_K, nprobe=IVF_NPROBE, filter_col="label"
     )
 
 
 def _knn_ivf_filtered_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -2273,13 +2268,14 @@ register("knn_ivf_filtered", _knn_ivf_filtered, _knn_ivf_filtered_sql())
 # codebooks (judge r12 item 1). Through r12 the PQ driver rows stayed on
 # the K=16 v1 artifacts because the mirror unrolled one squared-distance
 # expression per codebook entry (~2 MB SQL at K=256). These oracles stay
-# CONSTANT-SIZE in K instead: the checked-in pq_codebooks_v3 artifact is
-# projected to a parquet table (operators/pq_fixture.py) and encode/ADC
-# become a JOIN + argmin over it. Fold parity is unchanged — the per-
-# (vector, code) distance is the same sequential per-dim IEEE-754
-# accumulation on both engines (numpy acc = acc + diff*diff == DuckDB
-# list_reduce over the dim-ordered term list), so codes, ADC tables and
-# ranks hash-match exactly as the unrolled K=16 mirrors do.
+# CONSTANT-SIZE in K instead: the oracle reads the ``pq_codebooks_v3``
+# artifact file itself (m, k, vals — operators/artifacts.py) via
+# read_parquet, and encode/ADC become a JOIN + argmin over it. Fold
+# parity is unchanged — the per-(vector, code) distance is the same
+# sequential per-dim IEEE-754 accumulation on both engines (numpy
+# acc = acc + diff*diff == DuckDB list_reduce over the dim-ordered term
+# list), so codes, ADC tables and ranks hash-match exactly as the
+# unrolled K=16 mirrors do.
 # ---------------------------------------------------------------------------
 
 
@@ -2288,26 +2284,18 @@ def _pq256_codes_ctes(src: str = "embeddings", version: str = "v3") -> str:
     fixture table — the constant-size-in-K mirror of _pq_codes_ctes.
     ``src`` is the vector CTE/view to encode (the OPQ query passes its
     ``rotated`` CTE); ``version`` picks the codebook artifact."""
-    import importlib
-
-    from kafka_topic_analyzer_spark.operators.pq_fixture import (
-        codebook_fixture_path,
-    )
-
-    DSUB = importlib.import_module(
-        f"kafka_topic_analyzer_spark.operators.pq_codebooks_{version}"
-    ).DSUB
-    path = codebook_fixture_path(version)
+    name = f"pq_codebooks_{version}"
+    dsub = len(artifacts.load(name)[0][0])
     diff = (
-        f"(CAST(e.embedding[cb.m * {DSUB} + CAST(i AS INT)] AS DOUBLE)"
+        f"(CAST(e.embedding[cb.m * {dsub} + CAST(i AS INT)] AS DOUBLE)"
         f" - cb.vals[CAST(i AS INT)])"
     )
     return f"""
-cb256 AS (SELECT m, k, vals FROM read_parquet('{path}')),
+cb256 AS (SELECT m, k, vals FROM read_parquet('{artifacts.path(name)}')),
 dists AS (
   SELECT e.vec_id, cb.m AS m, cb.k AS k,
          list_reduce(
-           list_transform(range(1, {DSUB + 1}), i -> {diff} * {diff}),
+           list_transform(range(1, {dsub + 1}), i -> {diff} * {diff}),
            (a, b) -> a + b) AS d
   FROM {src} e CROSS JOIN cb256 cb
 ),
@@ -2337,26 +2325,17 @@ qdt AS (
 )"""
 
 
-def _pq256_adc_sum_sql(version: str = "v3") -> str:
-    import importlib
-
-    mod = importlib.import_module(
-        f"kafka_topic_analyzer_spark.operators.pq_codebooks_{version}"
-    )
-    K, M = mod.K, mod.M
-    return " + ".join(f"qdt[{mi * K} + codes[{mi + 1}] + 1]" for mi in range(M))
-
-
 def _knn_pq_adc_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """knn_pq_adc on the SERVING-grade K=256 codebooks (FAISS's standard
     8-bit code): the identical compressed-domain full scan, now driver-
     hashed on the artifact a deployment would actually ship."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS
+
+    codebooks = artifacts.load("pq_codebooks_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return PQ.knn_pq_adc(emb, queries, CODEBOOKS, k=TOP_K)
+    return PQ.knn_pq_adc(emb, queries, codebooks, k=TOP_K)
 
 
 def _knn_pq_adc_v3_sql() -> str:
@@ -2365,7 +2344,7 @@ WITH {_pq256_codes_ctes().lstrip()},
 {_pq256_qdt_cte().lstrip()},
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_pq256_adc_sum_sql()} AS adist_dec
+         {_pq_adc_sum_sql("v3")} AS adist_dec
   FROM codes c CROSS JOIN qdt
   WHERE c.vec_id <> query_id
 ),
@@ -2391,15 +2370,17 @@ def _knn_pq_adc_packed_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     at codes >= 128 — the case the K=16 form never reaches (advisor r12:
     a raw `<< 56` overflows DuckDB's checked shift there)."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS
+
+    codebooks = artifacts.load("pq_codebooks_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return PQ.knn_pq_adc_packed(emb, queries, CODEBOOKS, k=TOP_K)
+    return PQ.knn_pq_adc_packed(emb, queries, codebooks, k=TOP_K)
 
 
 def _knn_pq_adc_packed_v3_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import K, M
+    codebooks = artifacts.load("pq_codebooks_v3")
+    m_sub, k_codes = len(codebooks), len(codebooks[0])
 
     pack = " + ".join(
         f"(CAST(codes[{mi + 1}] AS BIGINT) << {8 * mi})"
@@ -2409,11 +2390,11 @@ def _knn_pq_adc_packed_v3_sql() -> str:
             f" + CASE WHEN codes[{mi + 1}] >= 128"
             f" THEN -9223372036854775808 ELSE 0 END)"
         )
-        for mi in range(M)
+        for mi in range(m_sub)
     )
     adc = " + ".join(
-        f"qdt[{mi * K} + CAST((codes_packed >> {8 * mi}) & 255 AS INT) + 1]"
-        for mi in range(M)
+        f"qdt[{mi * k_codes} + CAST((codes_packed >> {8 * mi}) & 255 AS INT) + 1]"
+        for mi in range(m_sub)
     )
     return f"""
 WITH {_pq256_codes_ctes().lstrip()},
@@ -2445,21 +2426,22 @@ def _knn_ivfpq_adc_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell pruning + 8-bit ADC — the production billion-vector shape with
     its production code size, driver-hashed."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return PQ.knn_ivfpq_adc(
-        emb, queries, CENTROIDS, CODEBOOKS, k=TOP_K, nprobe=IVF_NPROBE
+        emb, queries, centroids, codebooks, k=TOP_K, nprobe=IVF_NPROBE
     )
 
 
 def _knn_ivfpq_adc_v3_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH base AS (
@@ -2487,7 +2469,7 @@ cands AS (
   WHERE neighbor_id <> query_id
 ),
 scored AS (
-  SELECT query_id, neighbor_id, {_pq256_adc_sum_sql()} AS adist_dec
+  SELECT query_id, neighbor_id, {_pq_adc_sum_sql("v3")} AS adist_dec
   FROM cands
   JOIN codes c ON c.vec_id = neighbor_id
   JOIN qdt USING (query_id)
@@ -2512,16 +2494,17 @@ def _knn_ivfpq_refined_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist*queries raw rows — the query BENCH measures as
     refined_v3 (recall@10 0.911), now with a driver hash."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return PQ.knn_ivfpq_refined(
         emb,
         queries,
-        CENTROIDS,
-        CODEBOOKS,
+        centroids,
+        codebooks,
         k=TOP_K,
         nprobe=IVF_NPROBE,
         shortlist=PQ_SHORTLIST,
@@ -2529,10 +2512,10 @@ def _knn_ivfpq_refined_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_ivfpq_refined_v3_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     sq_l2 = (
         f"({_dot_sql('q.embedding', 'q.embedding')}"
@@ -2565,7 +2548,7 @@ cands AS (
   WHERE neighbor_id <> query_id
 ),
 adc AS (
-  SELECT query_id, neighbor_id, {_pq256_adc_sum_sql()} AS adist_dec
+  SELECT query_id, neighbor_id, {_pq_adc_sum_sql("v3")} AS adist_dec
   FROM cands
   JOIN codes c ON c.vec_id = neighbor_id
   JOIN qdt USING (query_id)
@@ -2601,35 +2584,30 @@ register("knn_ivfpq_refined_v3", _knn_ivfpq_refined_v3, _knn_ivfpq_refined_v3_sq
 def _knn_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ rung (judge r13 item 4): learned orthogonal rotation (PCA +
     balanced eigenvalue allocation, versioned artifact
-    operators/opq_rotation_v1.py) applied before K=256 PQ encode/ADC —
+    ``opq_rotation_v1``) applied before K=256 PQ encode/ADC —
     FAISS OPQMatrix -> IndexPQ. Rotation preserves L2 exactly, so the
     quantizer sees variance-balanced subspaces at zero ranking cost;
     the whole chain (rotate -> encode -> ADC -> rank) is driver-hashed."""
     from kafka_topic_analyzer_spark.operators import opq as OPQ
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import ROTATION
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_opq_v1 import (
-        CODEBOOKS,
-    )
+
+    rotation = artifacts.load("opq_rotation_v1")
+    codebooks = artifacts.load("pq_codebooks_opq_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    return OPQ.knn_opq_adc(emb, queries, ROTATION, CODEBOOKS, k=TOP_K)
+    return OPQ.knn_opq_adc(emb, queries, rotation, codebooks, k=TOP_K)
 
 
 def _knn_opq_adc_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import DIM
-    from kafka_topic_analyzer_spark.operators.pq_fixture import (
-        rotation_fixture_path,
-    )
-
-    rot_path = rotation_fixture_path("v1")
+    dim = len(artifacts.load("opq_rotation_v1"))
+    rot_path = artifacts.path("opq_rotation_v1")
     return f"""
 WITH rot AS (SELECT j, vals FROM read_parquet('{rot_path}')),
 rotvals AS (
   SELECT e.vec_id, r.j AS j,
          list_reduce(
            list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, {DIM + 1}), i ->
+             list_transform(range(1, {dim + 1}), i ->
                CAST(e.embedding[CAST(i AS INT)] AS DOUBLE)
                * r.vals[CAST(i AS INT)])),
            (a, b) -> a + b) AS v
@@ -2643,7 +2621,7 @@ rotated AS (
 {_pq256_qdt_cte().lstrip()},
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_pq256_adc_sum_sql(version="opq_v1")} AS adist_dec
+         {_pq_adc_sum_sql("opq_v1")} AS adist_dec
   FROM codes c CROSS JOIN qdt
   WHERE c.vec_id <> query_id
 ),
@@ -2668,25 +2646,20 @@ def _knn_opq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserves L2 exactly, so rotated exact distances rank identically
     to raw exact distances."""
     from kafka_topic_analyzer_spark.operators import opq as OPQ
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import ROTATION
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_opq_v1 import (
-        CODEBOOKS,
-    )
+
+    rotation = artifacts.load("opq_rotation_v1")
+    codebooks = artifacts.load("pq_codebooks_opq_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return OPQ.knn_opq_refined(
-        emb, queries, ROTATION, CODEBOOKS, k=TOP_K, shortlist=PQ_SHORTLIST
+        emb, queries, rotation, codebooks, k=TOP_K, shortlist=PQ_SHORTLIST
     )
 
 
 def _knn_opq_refined_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import DIM
-    from kafka_topic_analyzer_spark.operators.pq_fixture import (
-        rotation_fixture_path,
-    )
-
-    rot_path = rotation_fixture_path("v1")
+    dim = len(artifacts.load("opq_rotation_v1"))
+    rot_path = artifacts.path("opq_rotation_v1")
     sq_l2 = (
         f"({_dot_sql('q.embedding', 'q.embedding')}"
         f" - 2 * {_dot_sql('q.embedding', 'c2.embedding')}"
@@ -2698,7 +2671,7 @@ rotvals AS (
   SELECT e.vec_id, r.j AS j,
          list_reduce(
            list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, {DIM + 1}), i ->
+             list_transform(range(1, {dim + 1}), i ->
                CAST(e.embedding[CAST(i AS INT)] AS DOUBLE)
                * r.vals[CAST(i AS INT)])),
            (a, b) -> a + b) AS v
@@ -2712,7 +2685,7 @@ rotated AS (
 {_pq256_qdt_cte().lstrip()},
 adc AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_pq256_adc_sum_sql(version="opq_v1")} AS adist_dec
+         {_pq_adc_sum_sql("opq_v1")} AS adist_dec
   FROM codes c CROSS JOIN qdt
   WHERE c.vec_id <> query_id
 ),
@@ -2753,37 +2726,33 @@ def _knn_ivf_opq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_ivf_opq_adc). Completes the quantization-ladder cross the
     standalone OPQ rung left open."""
     from kafka_topic_analyzer_spark.operators import opq as OPQ
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import ROTATION
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_opq_v1 import (
-        CODEBOOKS as OPQ_CB,
-    )
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    rotation = artifacts.load("opq_rotation_v1")
+    codebooks = artifacts.load("pq_codebooks_opq_v1")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return OPQ.knn_ivf_opq_adc(
-        emb, queries, CENTROIDS, ROTATION, OPQ_CB, k=TOP_K, nprobe=IVF_NPROBE
+        emb, queries, centroids, rotation, codebooks, k=TOP_K, nprobe=IVF_NPROBE
     )
 
 
 def _knn_ivf_opq_adc_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
-    from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import DIM
-    from kafka_topic_analyzer_spark.operators.pq_fixture import (
-        rotation_fixture_path,
-    )
+    nlist = len(artifacts.load("ivf_centroids_v1"))
+    dim = len(artifacts.load("opq_rotation_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
-    rot_path = rotation_fixture_path("v1")
+    rot_path = artifacts.path("opq_rotation_v1")
     return f"""
 WITH rot AS (SELECT j, vals FROM read_parquet('{rot_path}')),
 rotvals AS (
   SELECT e.vec_id, r.j AS j,
          list_reduce(
            list_prepend(CAST(0 AS DOUBLE),
-             list_transform(range(1, {DIM + 1}), i ->
+             list_transform(range(1, {dim + 1}), i ->
                CAST(e.embedding[CAST(i AS INT)] AS DOUBLE)
                * r.vals[CAST(i AS INT)])),
            (a, b) -> a + b) AS v
@@ -2819,7 +2788,7 @@ cands AS (
 ),
 scored AS (
   SELECT query_id, neighbor_id,
-         {_pq256_adc_sum_sql(version="opq_v1")} AS adist_dec
+         {_pq_adc_sum_sql("opq_v1")} AS adist_dec
   FROM cands
   JOIN codes c ON c.vec_id = neighbor_id
   JOIN qdt USING (query_id)
@@ -2845,46 +2814,34 @@ def _knn_ivfpq_residual_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     (raw/IVF/refined/residual/OPQ) now has a green row on its
     production artifacts."""
     from kafka_topic_analyzer_spark.operators import pq as PQ
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v3 import (
-        CODEBOOKS as RES_CB3,
-    )
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_res_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return PQ.knn_ivfpq_residual_adc(
-        emb, queries, CENTROIDS, RES_CB3, k=TOP_K, nprobe=IVF_NPROBE
+        emb, queries, centroids, codebooks, k=TOP_K, nprobe=IVF_NPROBE
     )
 
 
 def _knn_ivfpq_residual_v3_sql() -> str:
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v3 import (
-        DSUB as RES_DSUB,
-        K as RES_K,
-        M as RES_M,
-    )
-    from kafka_topic_analyzer_spark.operators.pq_fixture import (
-        codebook_fixture_path,
-    )
-
-    path = codebook_fixture_path("res_v3")
+    nlist = len(artifacts.load("ivf_centroids_v1"))
+    dsub = len(artifacts.load("pq_codebooks_res_v3")[0][0])
+    path = artifacts.path("pq_codebooks_res_v3")
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
-    )
-    adc_sum = " + ".join(
-        f"qdt[{mi * RES_K} + codes[{mi + 1}] + 1]" for mi in range(RES_M)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     residual = (
         "list_transform(e.embedding, (x, i) ->"
         f" CAST(x AS DOUBLE) - {_centroid_case_sql('cl.cell')}[i])"
     )
     diff = (
-        f"(v.res[cb.m * {RES_DSUB} + CAST(i AS INT)]"
+        f"(v.res[cb.m * {dsub} + CAST(i AS INT)]"
         f" - cb.vals[CAST(i AS INT)])"
     )
     dist_fold = (
-        f"list_reduce(list_transform(range(1, {RES_DSUB + 1}),"
+        f"list_reduce(list_transform(range(1, {dsub + 1}),"
         f" i -> {diff} * {diff}), (a, b) -> a + b)"
     )
     return f"""
@@ -2943,7 +2900,7 @@ qdt AS (
   FROM qdists GROUP BY query_id, cell
 ),
 scored AS (
-  SELECT query_id, neighbor_id, {adc_sum} AS adist_dec
+  SELECT query_id, neighbor_id, {_pq_adc_sum_sql("res_v3")} AS adist_dec
   FROM idx JOIN qdt USING (cell)
   WHERE neighbor_id <> query_id
 ),
@@ -2993,9 +2950,10 @@ def _ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kafka_topic_analyzer_spark.functions.vectors import as_double
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS
     from kafka_topic_analyzer_spark.streaming import index_upsert as IU
+
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_v3")
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
@@ -3010,7 +2968,7 @@ def _ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = tempfile.mkdtemp(prefix="ivfpq_upsert_q_")
     try:
         for i, b in enumerate((base, upd, tomb)):
-            IU.merge_index_batch(b, index_dir, i, CENTROIDS, CODEBOOKS)
+            IU.merge_index_batch(b, index_dir, i, centroids, codebooks)
 
         final_q = base.where(
             (F.col("vec_id") < N_QUERIES) & (F.col("vec_id") % _DEL_MOD != 2)
@@ -3025,7 +2983,7 @@ def _ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (advisor r15: the mkdtemp leaked a full index copy per
         # invocation — selfcheck/fuzz runs accumulated /tmp garbage)
         return IU.knn_adc_packed_index(
-            index, final_q, CODEBOOKS, CENTROIDS, k=TOP_K, nprobe=IVF_NPROBE
+            index, final_q, codebooks, centroids, k=TOP_K, nprobe=IVF_NPROBE
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(index_dir, ignore_errors=True)
@@ -3035,10 +2993,10 @@ def _ivfpq_index_upsert_sql() -> str:
     """Oracle = IVF+PQ v3 ADC search over the FINAL corpus (updates
     applied, deletes removed) — it never sees the upsert machinery, so
     hash equality IS the search-equals-rebuild proof."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import NLIST
+    nlist = len(artifacts.load("ivf_centroids_v1"))
 
     structs = ", ".join(
-        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(NLIST)
+        f"{{'cell': {ci}, 'sim': {_ivf_sim_sql(ci)}}}" for ci in range(nlist)
     )
     return f"""
 WITH final AS (
@@ -3074,7 +3032,7 @@ cands AS (
   WHERE neighbor_id <> query_id
 ),
 scored AS (
-  SELECT query_id, neighbor_id, {_pq256_adc_sum_sql()} AS adist_dec
+  SELECT query_id, neighbor_id, {_pq_adc_sum_sql("v3")} AS adist_dec
   FROM cands
   JOIN codes c ON c.vec_id = neighbor_id
   JOIN qdt USING (query_id)

@@ -9,6 +9,7 @@ to apply the *runtime-settable* confs the engine depends on.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -47,9 +48,6 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int):
     """Temporarily pin ``spark.sql.shuffle.partitions`` (restored on exit).
@@ -78,11 +76,10 @@ def scoped_shuffle_partitions(spark: SparkSession, n: int):
 def get_spark(app_name: str = "kafka_topic_analyzer_spark") -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -1,14 +1,15 @@
 """Streaming IVF index ingest — the ANN serve path's missing half.
 
-A deployed IVF index is a FIXED versioned quantizer (operators/
-ivf_centroids_v1.py) plus per-cell postings that GROW as new embeddings
-arrive. Batch queries prove train/serve/search and the drift re-cut loop
-(tools/ivf_recut.py); this module proves ingest: an unbounded embedding
-stream is assigned to the serving quantizer's cells micro-batch by
-micro-batch (the assignment UDF is a stateless Arrow-batched projection,
-so it runs unchanged on a streaming frame) and the per-cell postings
-census is a streaming aggregation whose state is nlist-sized — 16 rows
-regardless of corpus size, the cheapest stateful operator there is.
+A deployed IVF index is a FIXED versioned quantizer (the
+``ivf_centroids_v1`` artifact, operators/artifacts.py) plus per-cell
+postings that GROW as new embeddings arrive. Batch queries prove
+train/serve/search and the drift re-cut loop (tools/recut.py ivf); this
+module proves ingest: an unbounded embedding stream is assigned to the
+serving quantizer's cells micro-batch by micro-batch (the assignment UDF
+is a stateless Arrow-batched projection, so it runs unchanged on a
+streaming frame) and the per-cell postings census is a streaming
+aggregation whose state is nlist-sized — 16 rows regardless of corpus
+size, the cheapest stateful operator there is.
 
 Bounded (AvailableNow) runs are byte-comparable to the batch assignment,
 which is what the registered oracle checks: count AND sum(vec_id) per
@@ -52,14 +53,14 @@ def streaming_ivf_cell_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded and the memory sink becomes the postings metadata table the
     search path consults for cell sizes (the nprobe cost model).
     """
-    from kafka_topic_analyzer_spark.operators.similarity import (
-        ivf_assign_fixed,
-        load_quantizer,
-    )
+    from kafka_topic_analyzer_spark.operators import artifacts
+    from kafka_topic_analyzer_spark.operators.similarity import ivf_assign_fixed
 
     prepare_session(spark)
     assigned = ivf_assign_fixed(
-        embeddings_stream(spark, sf_dir), load_quantizer(1), nprobe=1
+        embeddings_stream(spark, sf_dir),
+        artifacts.load("ivf_centroids_v1"),
+        nprobe=1,
     )
     counts = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
@@ -73,22 +74,25 @@ def streaming_ivf_cell_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of pq_code_census: new embeddings are PQ-encoded
-    micro-batch by micro-batch under the serving codebooks (operators/
-    pq_codebooks_v1.py — the encode UDF is a stateless Arrow-batched
-    projection, so it runs unchanged on a streaming frame) and the
-    per-(subspace, code) assignment census is a complete-mode streaming
-    aggregation whose state is M*K rows — 128, constant in corpus size.
+    micro-batch by micro-batch under the serving codebooks (the
+    ``pq_codebooks_v1`` artifact — the encode UDF is a stateless
+    Arrow-batched projection, so it runs unchanged on a streaming frame)
+    and the per-(subspace, code) assignment census is a complete-mode
+    streaming aggregation whose state is M*K rows — 128, constant in
+    corpus size.
 
     On a real deployment this census is the codebook-health metadata the
     re-cut trigger (tools/train_pq_codebooks.py) watches online, exactly
     as the IVF postings census feeds the adaptive-nprobe cost model.
     Count AND sum(vec_id) per code, so the hash proves code MEMBERSHIP.
     """
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.pq import pq_encode_scored
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
 
     prepare_session(spark)
-    enc = pq_encode_scored(embeddings_stream(spark, sf_dir), CODEBOOKS)
+    enc = pq_encode_scored(
+        embeddings_stream(spark, sf_dir), artifacts.load("pq_codebooks_v1")
+    )
     pairs = enc.select(
         "vec_id", F.posexplode("codes").alias("m", "code")
     ).select(F.col("m").cast("int"), F.col("code").cast("int"), "vec_id")
@@ -107,22 +111,19 @@ def streaming_pq_code_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_sq8_saturation_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of sq8_saturation_audit: new embeddings are
     SQ8-encoded micro-batch by micro-batch under the serving ranges
-    (operators/sq8_params_v1.py — encode is a stateless JVM transform
+    (the ``sq8_params_v1`` artifact — encode is a stateless JVM transform
     projection, so it runs unchanged on a streaming frame) and the
     per-dim saturation/reconstruction census is a complete-mode streaming
     aggregation whose state is DIM rows — 64, constant in corpus size.
     On a deployment this is the range-health metadata the re-cut trigger
-    (tools/sq8_recut.py) watches online, exactly as the PQ code census
-    feeds tools/pq_recut.py. Sums stay integer micro-units, so the hash
+    (tools/recut.py sq8) watches online, exactly as the PQ code census
+    feeds tools/recut.py pq. Sums stay integer micro-units, so the hash
     is rounding-free."""
-    from kafka_topic_analyzer_spark.operators.sq import (
-        load_sq8_params,
-        sq8_encode_expr,
-        sq8_terms_expr,
-    )
+    from kafka_topic_analyzer_spark.operators import artifacts
+    from kafka_topic_analyzer_spark.operators.sq import sq8_encode_expr, sq8_terms_expr
 
     prepare_session(spark)
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     enc = (
         embeddings_stream(spark, sf_dir)
         .withColumn("codes", F.expr(sq8_encode_expr(ranges)))
@@ -166,16 +167,17 @@ def streaming_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.pq import ivfpq_index, pack_codes
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS, M
 
     prepare_session(spark)
+    centroids = artifacts.load("ivf_centroids_v1")
+    codebooks = artifacts.load("pq_codebooks_v1")
     out_dir = tempfile.mkdtemp(prefix="ivfpq_index_stream_")
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         pack_codes(
-            ivfpq_index(batch_df, CENTROIDS, CODEBOOKS), M
+            ivfpq_index(batch_df, centroids, codebooks), len(codebooks)
         ).write.mode("append").partitionBy("cell").parquet(out_dir)
 
     q = (

@@ -499,11 +499,7 @@ def test_knn_ivf_fixed_recall_and_artifact(spark):
     """Serving-time IVF (checked-in quantizer): recall vs exact, and the
     artifact's norms must be strictly positive (degenerate centroids would
     silently zero a cell's similarities)."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS,
-        DIM,
-        NLIST,
-    )
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.similarity import (
         centroid_norms,
         knn_bruteforce,
@@ -511,8 +507,9 @@ def test_knn_ivf_fixed_recall_and_artifact(spark):
     )
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
-    assert len(CENTROIDS) == NLIST and all(len(c) == DIM for c in CENTROIDS)
-    assert all(n > 0 for n in centroid_norms(CENTROIDS))
+    centroids = artifacts.load("ivf_centroids_v1")
+    assert len(centroids) == 16 and all(len(c) == 64 for c in centroids)
+    assert all(n > 0 for n in centroid_norms(centroids))
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     exact = {
@@ -521,7 +518,7 @@ def test_knn_ivf_fixed_recall_and_artifact(spark):
     }
     fixed = {
         (r["query_id"], r["neighbor_id"])
-        for r in knn_ivf_fixed(emb, queries, CENTROIDS, k=5, nprobe=4).collect()
+        for r in knn_ivf_fixed(emb, queries, centroids, k=5, nprobe=4).collect()
     }
     recall = len(exact & fixed) / len(exact)
     # the quantizer is trained on the sf0.01 corpus, so serving the smoke
@@ -532,7 +529,7 @@ def test_knn_ivf_fixed_recall_and_artifact(spark):
     all_cells = {
         (r["query_id"], r["neighbor_id"])
         for r in knn_ivf_fixed(
-            emb, queries, CENTROIDS, k=5, nprobe=NLIST
+            emb, queries, centroids, k=5, nprobe=len(centroids)
         ).collect()
     }
     full_recall = len(exact & all_cells) / len(exact)

@@ -16,10 +16,12 @@ from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 from kafka_topic_analyzer_spark.functions.vectors import as_double
-from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
+from kafka_topic_analyzer_spark.operators import artifacts
 from kafka_topic_analyzer_spark.sources.tables import load_table
 from kafka_topic_analyzer_spark.streaming import index_upsert as IU
+
+CENTROIDS = artifacts.load("ivf_centroids_v1")
+CODEBOOKS = artifacts.load("pq_codebooks_v1")
 
 
 def _base(spark):

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_topic_analyzer_spark.operators import artifacts
 from tests.conftest import SF_SMOKE
 
 DRIFT = "transform(embedding, x -> CAST(0.6*x + 0.5 AS FLOAT))"
@@ -26,14 +27,13 @@ def _drifted(spark):
 
 
 def test_undrifted_corpus_needs_no_recut(spark):
-    from kafka_topic_analyzer_spark.operators.similarity import (
-        load_quantizer,
-        maybe_recut_quantizer,
-    )
+    from kafka_topic_analyzer_spark.operators.similarity import maybe_recut_quantizer
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    new, before, after = maybe_recut_quantizer(emb, load_quantizer(1), skew_bar=2.0)
+    new, before, after = maybe_recut_quantizer(
+        emb, artifacts.load("ivf_centroids_v1"), skew_bar=2.0
+    )
     assert new is None and after is None
     assert before["occupancy_skew"] <= 2.0 and before["n_empty_cells"] == 0
 
@@ -41,14 +41,11 @@ def test_undrifted_corpus_needs_no_recut(spark):
 def test_recut_restores_balance_on_drifted_corpus(spark):
     """v1 on the drifted corpus degenerates (most cells dead, one hot);
     the re-cut candidate rebalances. Both sides pinned with margins."""
-    from kafka_topic_analyzer_spark.operators.similarity import (
-        load_quantizer,
-        maybe_recut_quantizer,
-    )
+    from kafka_topic_analyzer_spark.operators.similarity import maybe_recut_quantizer
 
     drifted = _drifted(spark)
     new, before, after = maybe_recut_quantizer(
-        drifted, load_quantizer(1), skew_bar=2.0
+        drifted, artifacts.load("ivf_centroids_v1"), skew_bar=2.0
     )
     assert new is not None, "drifted corpus must trigger the re-cut"
     assert before["occupancy_skew"] > 5.0 and before["n_empty_cells"] >= 8
@@ -57,22 +54,22 @@ def test_recut_restores_balance_on_drifted_corpus(spark):
 
 
 def test_committed_v2_artifact_balances_drifted_corpus(spark):
-    """The checked-in v2 (cut by tools/ivf_recut.py on the drifted sf0.01
+    """The checked-in v2 (cut by tools/recut.py ivf on the drifted sf0.01
     corpus) balances the drifted distribution at this SF too, while v1 is
     untouched — the versioned-artifact contract: serving v1 searches stay
     bit-reproducible during a v2 rollout."""
-    from kafka_topic_analyzer_spark.operators import ivf_centroids_v1 as v1
-    from kafka_topic_analyzer_spark.operators import ivf_centroids_v2 as v2
     from kafka_topic_analyzer_spark.operators.similarity import (
         quantizer_occupancy,
     )
 
-    assert v2.VERSION == 2 and v2.NLIST == v1.NLIST and v2.DIM == v1.DIM
-    assert v2.CENTROIDS != v1.CENTROIDS
+    v1 = artifacts.load("ivf_centroids_v1")
+    v2 = artifacts.load("ivf_centroids_v2")
+    assert (len(v2), len(v2[0])) == (len(v1), len(v1[0]))
+    assert v2 != v1
 
     drifted = _drifted(spark)
-    skew_v1 = quantizer_occupancy(drifted, v1.CENTROIDS)
-    skew_v2 = quantizer_occupancy(drifted, v2.CENTROIDS)
+    skew_v1 = quantizer_occupancy(drifted, v1)
+    skew_v2 = quantizer_occupancy(drifted, v2)
     assert skew_v1["occupancy_skew"] > 5.0
     assert skew_v2["occupancy_skew"] < 2.0 and skew_v2["n_empty_cells"] == 0
 
@@ -83,14 +80,13 @@ def test_v1_serving_path_unchanged_by_recut(spark):
     registered knn_ivf_cosine query still runs against v1."""
     from kafka_topic_analyzer_spark.operators.similarity import (
         knn_ivf_fixed,
-        load_quantizer,
         maybe_recut_quantizer,
     )
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.orderBy("vec_id").limit(5)
-    v1 = load_quantizer(1)
+    v1 = artifacts.load("ivf_centroids_v1")
     baseline = {
         tuple(r) for r in knn_ivf_fixed(emb, queries, v1, k=3, nprobe=4).collect()
     }
@@ -111,48 +107,23 @@ def test_quantizer_occupancy_invariants(spark):
     """Occupancy stats are internally consistent for ANY quantizer: skew
     >= 1 (max cell >= ideal), counts account for every vector, empty
     cells bounded by nlist, and a 1-cell quantizer is trivially balanced."""
-    from kafka_topic_analyzer_spark.operators.similarity import (
-        load_quantizer,
-        quantizer_occupancy,
-    )
+    from kafka_topic_analyzer_spark.operators.similarity import quantizer_occupancy
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     n = emb.count()
-    for cents in (load_quantizer(1), load_quantizer(2)):
+    v1, v2 = artifacts.load("ivf_centroids_v1"), artifacts.load("ivf_centroids_v2")
+    for cents in (v1, v2):
         occ = quantizer_occupancy(emb, cents)
         assert occ["n_vecs"] == n
         assert occ["occupancy_skew"] >= 1.0 - 1e-9
         assert 0 <= occ["n_empty_cells"] < occ["n_cells"] == len(cents)
         assert occ["max_occupancy"] * occ["n_cells"] >= n
 
-    one_cell = (load_quantizer(1)[0],)
+    one_cell = (v1[0],)
     occ1 = quantizer_occupancy(emb, one_cell)
     assert occ1["occupancy_skew"] == 1.0 and occ1["n_empty_cells"] == 0
     assert occ1["max_occupancy"] == n
-
-
-def test_artifact_writer_roundtrip(tmp_path):
-    """write_centroid_artifact emits an importable module with repr-exact
-    doubles (bit-identical on reload)."""
-    import importlib.util
-
-    import sys
-
-    sys.path.insert(0, str(tmp_path))
-    try:
-        from tools.ivf_recut import write_centroid_artifact
-
-        cents = ((0.1, -0.25, 3.478145226836205e-05), (1.0, 0.0, -2.5))
-        out = tmp_path / "ivf_centroids_v9.py"
-        write_centroid_artifact(str(out), cents, 9, "test provenance\n")
-        spec = importlib.util.spec_from_file_location("ivf_centroids_v9", out)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        assert mod.VERSION == 9 and mod.NLIST == 2 and mod.DIM == 3
-        assert mod.CENTROIDS == cents
-    finally:
-        sys.path.remove(str(tmp_path))
 
 
 def test_adaptive_nprobe_smallest_prefix_rule(spark):
@@ -162,10 +133,6 @@ def test_adaptive_nprobe_smallest_prefix_rule(spark):
     selection itself reaches it — and the selection genuinely varies with
     the census (not a constant nprobe in disguise at the target where
     cells differ in mass)."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import (
-        CENTROIDS,
-        NLIST,
-    )
     from kafka_topic_analyzer_spark.operators.similarity import (
         ivf_assign_fixed,
         ivf_assign_ranked,
@@ -178,10 +145,11 @@ def test_adaptive_nprobe_smallest_prefix_rule(spark):
 
     import __spark_entry__ as E
 
+    centroids = artifacts.load("ivf_centroids_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     census = {
         r["cell"]: r["n"]
-        for r in ivf_assign_fixed(emb, CENTROIDS, nprobe=1)
+        for r in ivf_assign_fixed(emb, centroids, nprobe=1)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -190,7 +158,7 @@ def test_adaptive_nprobe_smallest_prefix_rule(spark):
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     order = {
         r["vec_id"]: r["cells"]
-        for r in ivf_assign_ranked(queries, CENTROIDS, nprobe=NLIST)
+        for r in ivf_assign_ranked(queries, centroids, nprobe=len(centroids))
         .groupBy("vec_id")
         .agg(F.sort_array(F.collect_list(F.struct("probe_rank", "cell"))).alias("s"))
         .select("vec_id", F.col("s.cell").alias("cells"))

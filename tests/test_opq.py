@@ -11,24 +11,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
+from kafka_topic_analyzer_spark.operators import artifacts
 from kafka_topic_analyzer_spark.operators.opq import (
     opq_train_rotation,
     rotate,
 )
-from kafka_topic_analyzer_spark.operators.opq_rotation_v1 import (
-    DIM,
-    M as ROT_M,
-    ROTATION,
-)
 from kafka_topic_analyzer_spark.operators.pq import pq_encode_scored
-from kafka_topic_analyzer_spark.operators.pq_codebooks_opq_v1 import (
-    CODEBOOKS as OPQ_CB,
-)
-from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import (
-    CODEBOOKS as RAW_CB,
-)
 from kafka_topic_analyzer_spark.sources.tables import load_table
 
+ROTATION = artifacts.load("opq_rotation_v1")
+DIM = len(ROTATION)
+OPQ_CB = artifacts.load("pq_codebooks_opq_v1")
+RAW_CB = artifacts.load("pq_codebooks_v3")
+CENTROIDS = artifacts.load("ivf_centroids_v1")
 ROT = np.array(ROTATION, dtype=np.float64)
 
 
@@ -114,7 +109,7 @@ def test_opq_quantization_error_below_raw(spark):
 
 
 def test_trainer_m_matches_codebooks():
-    assert ROT_M == len(OPQ_CB) == 8
+    assert len(OPQ_CB) == 8
     assert len(OPQ_CB[0]) == 256
 
 
@@ -123,7 +118,6 @@ def test_ivf_assignment_is_rotation_invariant(spark):
     centroids gives the same cells as assigning ROTATED vectors to
     ROTATED centroids (rotation preserves dot products and norms), so the
     composition reuses the serving IVF artifact unchanged."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.similarity import ivf_assign_fixed
 
     emb = load_table(spark, SF_SMOKE, "embeddings").limit(200)
@@ -148,7 +142,6 @@ def test_knn_ivf_opq_adc_matches_probed_exact_adc(spark):
     """The composed search returns, per query, exactly the top-k by
     rotated-space ADC distance among IVF-probed candidates — checked
     against an independent numpy recomputation."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.opq import knn_ivf_opq_adc
     from kafka_topic_analyzer_spark.operators.similarity import ivf_assign_fixed
 

@@ -574,13 +574,16 @@ def test_ivfpq_index_build_is_one_pass(spark):
     """The IndexIVFPQ build (cell + codes) must batch both UDFs over a
     single corpus scan — the index a 100 TB deployment persists is ONE
     read of the raw vectors."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.pq import ivfpq_index
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    plan = _executed(ivfpq_index(emb, CENTROIDS, CODEBOOKS))
+    plan = _executed(
+        ivfpq_index(
+            emb, artifacts.load("ivf_centroids_v1"), artifacts.load("pq_codebooks_v1")
+        )
+    )
     assert plan.count("FileScan parquet") == 1, "index build must be one pass"
 
 

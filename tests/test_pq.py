@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
+from kafka_topic_analyzer_spark.operators import artifacts
 from kafka_topic_analyzer_spark.operators.pq import (
     knn_ivfpq_adc,
     knn_pq_adc,
@@ -24,14 +25,11 @@ from kafka_topic_analyzer_spark.operators.pq import (
     pq_encode_scored,
     pq_train,
 )
-from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import (
-    CODEBOOKS,
-    DSUB,
-    K,
-    M,
-)
-from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
 from kafka_topic_analyzer_spark.sources.tables import load_table
+
+CODEBOOKS = artifacts.load("pq_codebooks_v1")
+M, K, DSUB = len(CODEBOOKS), len(CODEBOOKS[0]), len(CODEBOOKS[0][0])
+CENTROIDS = artifacts.load("ivf_centroids_v1")
 
 
 def _np_codes(vecs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -224,10 +222,8 @@ def test_residual_quantization_is_tighter(spark):
 
     from kafka_topic_analyzer_spark.functions.vectors import as_double
     from kafka_topic_analyzer_spark.operators.pq import _residual_parts_udf
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v1 import (
-        CODEBOOKS as RES_CB,
-    )
 
+    res_cb = artifacts.load("pq_codebooks_res_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     raw_err = (
         pq_encode_scored(emb, CODEBOOKS)
@@ -239,7 +235,7 @@ def test_residual_quantization_is_tighter(spark):
         .agg(F.avg("e"))
         .first()[0]
     )
-    res_udf = _residual_parts_udf(CENTROIDS, RES_CB)
+    res_udf = _residual_parts_udf(CENTROIDS, res_cb)
     res_err = (
         emb.select(res_udf(as_double(F.col("embedding"))).alias("_rp"))
         .select(
@@ -258,15 +254,13 @@ def test_residual_index_cells_match_ivf_assignment(spark):
     serving ivf_assign_fixed assignment — one UDF computing both halves
     cannot drift from the two-UDF batch path."""
     from kafka_topic_analyzer_spark.operators.pq import ivfpq_residual_index
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_res_v1 import (
-        CODEBOOKS as RES_CB,
-    )
     from kafka_topic_analyzer_spark.operators.similarity import ivf_assign_fixed
 
+    res_cb = artifacts.load("pq_codebooks_res_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     got = {
         r["vec_id"]: r["cell"]
-        for r in ivfpq_residual_index(emb, CENTROIDS, RES_CB).collect()
+        for r in ivfpq_residual_index(emb, CENTROIDS, res_cb).collect()
     }
     want = {
         r["vec_id"]: r["cell"]
@@ -310,18 +304,15 @@ def test_codebook_recut_restores_health_on_drifted_corpus(spark):
 
 
 def test_committed_v2_codebooks_serve_drifted_corpus(spark):
-    """The shipped artifact (cut on drifted sf0.01 by tools/pq_recut.py)
+    """The shipped artifact (cut on drifted sf0.01 by tools/recut.py pq)
     must stay healthy on the drifted smoke corpus too."""
-    from kafka_topic_analyzer_spark.operators.pq import (
-        load_codebooks,
-        pq_codebook_health,
-    )
+    from kafka_topic_analyzer_spark.operators.pq import pq_codebook_health
 
     emb = _drifted(load_table(spark, SF_SMOKE, "embeddings"))
-    v2 = load_codebooks(2)
+    v2 = artifacts.load("pq_codebooks_v2")
     h = pq_codebook_health(emb, v2)
     assert h["dead_frac"] < 0.25, h
-    h1 = pq_codebook_health(emb, load_codebooks(1))
+    h1 = pq_codebook_health(emb, CODEBOOKS)
     assert h["mean_qerr"] < h1["mean_qerr"] / 5, (h, h1)
 
 
@@ -341,21 +332,6 @@ def test_v1_codebooks_unchanged_by_recut(spark):
         for r in pq_encode_scored(emb, CODEBOOKS).orderBy("vec_id").collect()
     ]
     assert before_codes == after_codes
-
-
-def test_codebook_artifact_writer_roundtrip(tmp_path):
-    from tools.pq_recut import write_codebook_artifact
-
-    cb = tuple(
-        tuple(tuple(float(mi * 100 + ki * 10 + j) for j in range(2)) for ki in range(3))
-        for mi in range(2)
-    )
-    out = tmp_path / "pq_codebooks_v9.py"
-    write_codebook_artifact(str(out), cb, 9, "test provenance")
-    ns: dict = {}
-    exec(out.read_text(), ns)
-    assert ns["VERSION"] == 9 and ns["M"] == 2 and ns["K"] == 3 and ns["DSUB"] == 2
-    assert ns["CODEBOOKS"] == cb
 
 
 def test_pq_train_mat_guards_small_samples():

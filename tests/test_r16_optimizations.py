@@ -19,9 +19,11 @@ from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
 from kafka_topic_analyzer_spark.functions.vectors import as_double
-from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
-from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
+from kafka_topic_analyzer_spark.operators import artifacts
 from kafka_topic_analyzer_spark.sources.tables import load_table
+
+CENTROIDS = artifacts.load("ivf_centroids_v1")
+CODEBOOKS = artifacts.load("pq_codebooks_v1")
 
 
 def _chain_edges(spark):

@@ -88,3 +88,14 @@ def test_cli_version_flag(capsys):
         main(["--version"])
     assert e.value.code == 0
     assert VERSION in capsys.readouterr().out
+
+
+def test_cli_streaming_needs_parquet_fixture(capsys):
+    """--streaming over a live topic is rejected up front instead of
+    silently running the batch report (no Spark session is started)."""
+    from kafka_topic_analyzer_spark.cli import main
+
+    with pytest.raises(SystemExit) as e:
+        main(["--streaming", "--bootstrap-server", "host:9092", "--topic", "t"])
+    assert e.value.code == 2
+    assert "--streaming needs --parquet-fixture" in capsys.readouterr().err

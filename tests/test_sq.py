@@ -13,13 +13,12 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
-from kafka_topic_analyzer_spark.operators.sq import (
-    knn_sq8,
-    load_sq8_params,
-    sq8_encode,
-    sq8_train,
-)
+from kafka_topic_analyzer_spark.operators import artifacts
+from kafka_topic_analyzer_spark.operators.sq import knn_sq8, sq8_encode, sq8_train
 from kafka_topic_analyzer_spark.sources.tables import load_table
+
+CENTROIDS = artifacts.load("ivf_centroids_v1")
+CODEBOOKS = artifacts.load("pq_codebooks_v1")
 
 
 def _np_codes(mat: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -32,7 +31,7 @@ def _np_codes(mat: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
 
 def test_sq8_codes_match_numpy_reference(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings").orderBy("vec_id").limit(64)
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     lo = np.array(ranges[0])
     hi = np.array(ranges[1])
     rows = sq8_encode(emb, ranges).select("vec_id", "embedding", "codes").collect()
@@ -65,7 +64,7 @@ def test_sq8_ranking_is_near_exact(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
     got = (
-        knn_sq8(emb, queries, load_sq8_params(1), k=5)
+        knn_sq8(emb, queries, artifacts.load("sq8_params_v1"), k=5)
         .select("query_id", "neighbor_id")
     )
     q = queries.select(
@@ -102,7 +101,7 @@ def test_sq8_saturation_detects_range_drift(spark):
     census must light up — the re-cut trigger the audit query exists for."""
     from kafka_topic_analyzer_spark.operators.sq import sq8_encode_expr
 
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     drifted = emb.withColumn(
         "embedding",
@@ -124,7 +123,6 @@ def test_packed_adc_equals_array_adc(spark):
         knn_pq_adc,
         knn_pq_adc_packed,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
@@ -145,19 +143,18 @@ def test_packed_adc_equals_array_adc_k256(spark):
         pack_codes,
         pq_encode_scored,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v3 import CODEBOOKS, M
 
+    cb3 = artifacts.load("pq_codebooks_v3")
+    m_sub = len(cb3)
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    a = sorted(map(tuple, knn_pq_adc(emb, queries, CODEBOOKS, k=5).collect()))
-    p = sorted(
-        map(tuple, knn_pq_adc_packed(emb, queries, CODEBOOKS, k=5).collect())
-    )
+    a = sorted(map(tuple, knn_pq_adc(emb, queries, cb3, k=5).collect()))
+    p = sorted(map(tuple, knn_pq_adc_packed(emb, queries, cb3, k=5).collect()))
     assert a == p
     # the wrap case actually occurs: some top-lane code >= 128
     top = (
-        pack_codes(pq_encode_scored(emb, CODEBOOKS).select("vec_id", "codes"), M)
-        .select(F.shiftright("codes_packed", 8 * (M - 1)).bitwiseAND(F.lit(255).cast("bigint")).alias("c"))
+        pack_codes(pq_encode_scored(emb, cb3).select("vec_id", "codes"), m_sub)
+        .select(F.shiftright("codes_packed", 8 * (m_sub - 1)).bitwiseAND(F.lit(255).cast("bigint")).alias("c"))
         .agg(F.max("c"))
         .collect()[0][0]
     )
@@ -169,12 +166,10 @@ def test_ivfpq_refined_recall_at_least_adc(spark):
     must rank at least as well as raw IVF+PQ ADC against the exact-L2
     truth restricted to the same probed candidates — refine can only
     reorder toward exactness."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.pq import (
         knn_ivfpq_adc,
         knn_ivfpq_refined,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
     from kafka_topic_analyzer_spark.functions.vectors import dot, pair_dot_udf
     from pyspark.sql import Window as W
 
@@ -226,7 +221,7 @@ def test_undrifted_corpus_needs_no_sq8_recut(spark):
     from kafka_topic_analyzer_spark.operators.sq import maybe_recut_sq8
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    new, before, after = maybe_recut_sq8(emb, load_sq8_params(1))
+    new, before, after = maybe_recut_sq8(emb, artifacts.load("sq8_params_v1"))
     assert new is None and after is None
     assert before["sat_frac"] < 0.05
 
@@ -236,51 +231,30 @@ def test_sq8_recut_restores_health_on_drifted_corpus(spark):
     re-deriving ranges from the drifted corpus restores the structural
     floor while the serving artifact is never mutated."""
     from kafka_topic_analyzer_spark.operators.sq import maybe_recut_sq8
-    from kafka_topic_analyzer_spark.operators import sq8_params_v1 as V1
 
-    lo_before, hi_before = tuple(V1.LO), tuple(V1.HI)
+    serving = artifacts.load("sq8_params_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings")
     drifted = emb.withColumn(
         "embedding", F.expr("transform(embedding, x -> CAST(x + 5.0 AS FLOAT))")
     )
-    new, before, after = maybe_recut_sq8(drifted, load_sq8_params(1))
+    new, before, after = maybe_recut_sq8(drifted, serving)
     assert before["sat_frac"] == 1.0
     assert new is not None and after["sat_frac"] < 0.05
     assert after["mean_recon_err"] < before["mean_recon_err"]
     # serving artifact untouched
-    assert (tuple(V1.LO), tuple(V1.HI)) == (lo_before, hi_before)
-
-
-def test_sq8_artifact_writer_roundtrip(tmp_path):
-    """tools/sq8_recut.write_sq8_artifact must round-trip repr-exact."""
-    import importlib.util
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from sq8_recut import write_sq8_artifact
-
-    ranges = (
-        tuple(float(x) / 7 for x in range(64)),
-        tuple(float(x) / 7 + 1.25 for x in range(64)),
-    )
-    path = tmp_path / "sq8_params_v9.py"
-    write_sq8_artifact(str(path), ranges, 9, "test provenance")
-    spec = importlib.util.spec_from_file_location("sq8_v9", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    assert (mod.LO, mod.HI) == ranges and mod.VERSION == 9
+    assert artifacts.load("sq8_params_v1") == serving
+    assert new != serving
 
 
 def test_knn_ivf_sq8_matches_full_scan_at_full_probe(spark):
     """nprobe=nlist probes every cell, so IVF+SQ8 must return exactly the
     full-scan knn_sq8 result — the composition is cell pruning AND
     NOTHING ELSE on top of the SQ8 scorer."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.sq import knn_ivf_sq8
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 5)
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     full = knn_sq8(emb, queries, ranges, k=5)
     ivf = knn_ivf_sq8(emb, queries, CENTROIDS, ranges, k=5, nprobe=len(CENTROIDS))
     assert sorted(map(tuple, full.collect())) == sorted(map(tuple, ivf.collect()))
@@ -290,9 +264,7 @@ def test_streamed_ivfpq_index_equals_batch(spark):
     """The incrementally streamed index must equal the batch build
     row-for-row (same cells, same packed codes) — the maintained-index
     ingestion claim."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.pq import ivfpq_index, pack_codes
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS, M
     from kafka_topic_analyzer_spark.streaming.ivf_stream import (
         streaming_ivfpq_index_build,
     )
@@ -301,7 +273,7 @@ def test_streamed_ivfpq_index_equals_batch(spark):
     want = sorted(
         map(
             tuple,
-            pack_codes(ivfpq_index(emb, CENTROIDS, CODEBOOKS), M)
+            pack_codes(ivfpq_index(emb, CENTROIDS, CODEBOOKS), len(CODEBOOKS))
             .select("vec_id", "cell", "codes_packed")
             .collect(),
         )
@@ -329,7 +301,7 @@ def test_binary_refine_recall_at_least_hamming(spark):
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     ham = knn_binary_hamming(emb, queries, ranges, k=5)
     assert ham.where((F.col("hamming") < 0) | (F.col("hamming") > 64)).count() == 0
 
@@ -380,7 +352,7 @@ def test_binary_codes_pack_all_64_bits(spark):
         binary_thresholds,
     )
 
-    thr = binary_thresholds(load_sq8_params(1))
+    thr = binary_thresholds(artifacts.load("sq8_params_v1"))
     df = spark.createDataFrame(
         [(0, [1e6] * 64), (1, [-1e6] * 64)],
         "vec_id long, embedding array<float>",
@@ -392,7 +364,6 @@ def test_binary_codes_pack_all_64_bits(spark):
 def test_filtered_ivf_respects_predicate(spark):
     """Every returned neighbor must carry the query's own label — the
     filter applies to the candidate stream, not the ranked output."""
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.similarity import knn_ivf_filtered
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -428,7 +399,7 @@ def test_sq8_udf_distance_equals_hof_expression(spark):
         sq8_encode,
     )
 
-    ranges = load_sq8_params(1)
+    ranges = artifacts.load("sq8_params_v1")
     emb = load_table(spark, SF_SMOKE, "embeddings").limit(20)
     enc = sq8_encode(emb, ranges).select("vec_id", "codes")
     q = emb.select(

@@ -171,7 +171,7 @@ SECTIONS: list[tuple[str, str | None, str]] = [
     (
         "pq_code_census",
         "pq_code_census",
-        "Codebook-health census (r11): ONE encode scan, posexplode to (subspace, code) pairs, a partial-aggregating M*K-sized groupBy with decimal-exact error sums, and a 128-row spine join for dead-code visibility. Nothing corpus-sized survives the aggregate; this is the table the re-cut trigger (tools/pq_recut.py) reads.",
+        "Codebook-health census (r11): ONE encode scan, posexplode to (subspace, code) pairs, a partial-aggregating M*K-sized groupBy with decimal-exact error sums, and a 128-row spine join for dead-code visibility. Nothing corpus-sized survives the aggregate; this is the table the re-cut trigger (tools/recut.py pq) reads.",
     ),
     (
         "token_window_chunking",

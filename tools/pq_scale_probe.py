@@ -54,19 +54,20 @@ def main() -> None:
     from pyspark.sql import Window as W, functions as F
 
     from kafka_topic_analyzer_spark.functions.vectors import dot, pair_dot_udf
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.binary import knn_binary_hamming
-    from kafka_topic_analyzer_spark.operators.ivf_centroids_v1 import CENTROIDS
     from kafka_topic_analyzer_spark.operators.pq import (
         knn_ivfpq_adc,
         knn_pq_adc,
         knn_pq_refined,
     )
-    from kafka_topic_analyzer_spark.operators.pq_codebooks_v1 import CODEBOOKS
-    from kafka_topic_analyzer_spark.operators.sq import knn_sq8, load_sq8_params
+    from kafka_topic_analyzer_spark.operators.sq import knn_sq8
     from kafka_topic_analyzer_spark.session import get_spark
     from kafka_topic_analyzer_spark.sources.tables import load_table
 
-    SQ8_RANGES = load_sq8_params(1)
+    CENTROIDS = artifacts.load("ivf_centroids_v1")
+    CODEBOOKS = artifacts.load("pq_codebooks_v1")
+    SQ8_RANGES = artifacts.load("sq8_params_v1")
 
     spark = get_spark("pq-scale-probe")
     base = load_table(spark, sf_dir, "embeddings")

@@ -1,11 +1,12 @@
 """One-off generator for the checked-in IVF quantizer constants.
 
 Trains the deterministic k-means (operators/similarity.ivf_centroids) on
-the sf0.01 embeddings and writes the centroids as a Python module of
-``repr``-exact double literals. The ASSIGNMENT + search path then runs
-against these FIXED centroids (operators/similarity.ivf_assign_fixed),
-which is what makes the IVF query DuckDB-mirrorable: the oracle inlines
-the same literals and reproduces every similarity bit-for-bit.
+the sf0.01 embeddings and saves the centroids as a versioned artifact
+(operators/artifacts.py, bit-exact float64). The ASSIGNMENT + search path
+then runs against these FIXED centroids
+(operators/similarity.ivf_assign_fixed), which is what makes the IVF query
+DuckDB-mirrorable: the oracle inlines the same values and reproduces
+every similarity bit-for-bit.
 
 This mirrors production IVF practice (FAISS): the quantizer is a training
 ARTIFACT, versioned and shipped with the index — re-run this tool to cut
@@ -19,7 +20,7 @@ the sample trainer, so on a corpus the sample covers the artifacts pin
 (near-)identical (tests/test_distributed_training.py); use it when the
 bounded sample stops being representative.
 
-Usage: python tools/train_ivf_centroids.py [sf_dir] [out.py] [--distributed]
+Usage: python tools/train_ivf_centroids.py [sf_dir] [name] [--distributed]
 """
 
 from __future__ import annotations
@@ -31,15 +32,12 @@ sys.path.insert(0, ".")
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--")]
 DISTRIBUTED = "--distributed" in sys.argv[1:]
 SF_DIR = ARGS[0] if len(ARGS) > 0 else "/root/testdata/sf0.01"
-OUT = (
-    ARGS[1]
-    if len(ARGS) > 1
-    else "kafka_topic_analyzer_spark/operators/ivf_centroids_v1.py"
-)
+NAME = ARGS[1] if len(ARGS) > 1 else "ivf_centroids_v1"
 NLIST, ITERS = 16, 3
 
 
 def main() -> None:
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.similarity import (
         ivf_centroids,
         ivf_centroids_distributed,
@@ -53,27 +51,14 @@ def main() -> None:
         cents = ivf_centroids_distributed(emb, nlist=NLIST, iters=ITERS)
     else:
         cents = ivf_centroids(emb, nlist=NLIST, iters=ITERS)
-    dim = cents.shape[1]
-    lines = [
-        '"""Fixed IVF coarse-quantizer centroids (generated artifact).',
-        "",
-        f"Trained by tools/train_ivf_centroids.py on {SF_DIR} embeddings",
-        f"(nlist={NLIST}, iters={ITERS}, deterministic seeds/ties — see",
-        "operators/similarity.ivf_centroids). repr-exact doubles so Spark and",
-        'the DuckDB oracle parse identical IEEE-754 values."""',
-        "",
-        f"NLIST = {NLIST}",
-        f"DIM = {dim}",
-        "",
-        "CENTROIDS: tuple[tuple[float, ...], ...] = (",
-    ]
-    for row in cents:
-        vals = ", ".join(repr(float(v)) for v in row)
-        lines.append(f"    ({vals}),")
-    lines.append(")")
-    with open(OUT, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {OUT}: {NLIST} x {dim} centroids")
+    path = artifacts.save(
+        NAME,
+        cents,
+        f"Trained by tools/train_ivf_centroids.py on {SF_DIR} embeddings "
+        f"(nlist={NLIST}, iters={ITERS}, deterministic seeds/ties — see "
+        "operators/similarity.ivf_centroids).",
+    )
+    print(f"wrote {path}: {cents.shape[0]} x {cents.shape[1]} centroids")
 
 
 if __name__ == "__main__":

@@ -1,11 +1,13 @@
 """One-off generator for the checked-in OPQ artifacts (judge r13 item 4).
 
-Cuts TWO versioned modules from one training pass:
+Cuts TWO versioned artifacts (operators/artifacts.py) from one training
+pass:
 
-* ``operators/opq_rotation_v1.py`` — the learned orthogonal rotation
+* ``opq_rotation_v1`` — the learned orthogonal rotation
   (PCA + balanced eigenvalue allocation init, then the parametric
   codebooks|Procrustes alternation — operators/opq.opq_train_sample);
-* ``operators/pq_codebooks_opq_v1.py`` — PQ codebooks trained on the
+  ROTATION[j][i]: rotated[j] = sum_i ROTATION[j][i] * x[i];
+* ``pq_codebooks_opq_v1`` — PQ codebooks trained on the
   ROTATED sample (same per-subspace Lloyd as every other cut), so the
   quantizer sees the variance-balanced space it will serve in.
 
@@ -46,13 +48,14 @@ for f in FLAGS:
     if f.startswith("--out-suffix="):
         SUFFIX = f.split("=", 1)[1]
 
-ROT_OUT = f"kafka_topic_analyzer_spark/operators/opq_rotation_{SUFFIX}.py"
-CB_OUT = f"kafka_topic_analyzer_spark/operators/pq_codebooks_opq_{SUFFIX}.py"
+ROT_NAME = f"opq_rotation_{SUFFIX}"
+CB_NAME = f"pq_codebooks_opq_{SUFFIX}"
 
 OPQ_ITERS = 10
 
 
 def main() -> None:
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.opq import (
         opq_train_distributed,
         opq_train_sample,
@@ -78,55 +81,23 @@ def main() -> None:
         trained_on = f"{SF_DIR} embeddings (bounded sample of {len(mat)})"
     assert np.allclose(rot @ rot.T, np.eye(rot.shape[0]), atol=1e-10), "not orthogonal"
 
-    dim = rot.shape[0]
-    lines = [
-        '"""Fixed OPQ rotation (generated artifact).',
-        "",
-        f"Trained by tools/train_opq.py on {trained_on}",
-        f"(PCA + balanced eigenvalue allocation into m={M} subspaces +",
-        f"{OPQ_ITERS} codebooks|Procrustes alternations — operators/opq;",
-        "orthogonal to 1e-10).",
-        "ROTATION[j][i]: rotated[j] = sum_i ROTATION[j][i] * x[i].",
-        'repr-exact doubles — both engines parse identical IEEE-754."""',
-        "",
-        f"DIM = {dim}",
-        f"M = {M}",
-        "",
-        "ROTATION: tuple[tuple[float, ...], ...] = (",
-    ]
-    for j in range(dim):
-        vals = ", ".join(repr(float(v)) for v in rot[j])
-        lines.append(f"    ({vals}),")
-    lines.append(")")
-    with open(ROT_OUT, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {ROT_OUT}: {dim} x {dim} rotation")
-
-    m, k, dsub = cb.shape
-    lines = [
-        '"""Fixed OPQ-space PQ codebooks (generated artifact).',
-        "",
-        f"Trained by tools/train_opq.py on {trained_on} AFTER the",
-        f"opq_rotation_{SUFFIX} rotation (m={M}, k={K}, iters={ITERS} — same",
+    path = artifacts.save(
+        ROT_NAME,
+        rot,
+        f"Trained by tools/train_opq.py on {trained_on} "
+        f"(PCA + balanced eigenvalue allocation into m={M} subspaces + "
+        f"{OPQ_ITERS} codebooks|Procrustes alternations — operators/opq; "
+        "orthogonal to 1e-10). rotated[j] = sum_i ROTATION[j][i] * x[i].",
+    )
+    print(f"wrote {path}: {rot.shape[0]} x {rot.shape[1]} rotation")
+    path = artifacts.save(
+        CB_NAME,
+        cb,
+        f"Trained by tools/train_opq.py on {trained_on} AFTER the "
+        f"{ROT_NAME} rotation (m={M}, k={K}, iters={ITERS} — same "
         "deterministic Lloyd as every pq_codebooks cut).",
-        'repr-exact doubles."""',
-        "",
-        f"M = {m}",
-        f"K = {k}",
-        f"DSUB = {dsub}",
-        "",
-        "CODEBOOKS: tuple[tuple[tuple[float, ...], ...], ...] = (",
-    ]
-    for mi in range(m):
-        lines.append("    (")
-        for ki in range(k):
-            vals = ", ".join(repr(float(v)) for v in cb[mi, ki])
-            lines.append(f"        ({vals}),")
-        lines.append("    ),")
-    lines.append(")")
-    with open(CB_OUT, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {CB_OUT}: {m} x {k} x {dsub} codebooks")
+    )
+    print(f"wrote {path}: {' x '.join(map(str, cb.shape))} codebooks")
 
 
 if __name__ == "__main__":

@@ -1,18 +1,19 @@
 """One-off generator for the checked-in PQ codebook constants.
 
 Trains deterministic per-subspace k-means (operators/pq.pq_train) on the
-sf0.01 embeddings and writes the codebooks as a Python module of
-``repr``-exact double literals. Encoding + ADC search then run against
-these FIXED codebooks (operators/pq.pq_encode_scored / knn_pq_adc),
-which is what makes the PQ queries DuckDB-mirrorable: the oracle inlines
-the same literals and reproduces every subspace distance bit-for-bit.
+sf0.01 embeddings and saves the codebooks as a versioned artifact
+(operators/artifacts.py, bit-exact float64). Encoding + ADC search then
+run against these FIXED codebooks (operators/pq.pq_encode_scored /
+knn_pq_adc), which is what makes the PQ queries DuckDB-mirrorable: the
+oracle reads the same values and reproduces every subspace distance
+bit-for-bit.
 
 Same lifecycle as the IVF quantizer (tools/train_ivf_centroids.py):
 the codebook is a training ARTIFACT, versioned and shipped with the
 index — re-run this tool to cut a new version when the corpus
 distribution shifts.
 
-Usage: python tools/train_pq_codebooks.py [sf_dir] [out.py] [M] [K] [ITERS]
+Usage: python tools/train_pq_codebooks.py [sf_dir] [name] [M] [K] [ITERS]
 (r12: M/K/ITERS are now CLI args so capacity rungs — e.g. the K=256
 serving-grade v3 cut — reuse this one trainer.)
 
@@ -36,17 +37,14 @@ DISTRIBUTED = "--distributed" in sys.argv
 sys.argv = [a for a in sys.argv if a != "--distributed"]
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = (
-    sys.argv[2]
-    if len(sys.argv) > 2
-    else "kafka_topic_analyzer_spark/operators/pq_codebooks_v1.py"
-)
+NAME = sys.argv[2] if len(sys.argv) > 2 else "pq_codebooks_v1"
 M = int(sys.argv[3]) if len(sys.argv) > 3 else 8
 K = int(sys.argv[4]) if len(sys.argv) > 4 else 16
 ITERS = int(sys.argv[5]) if len(sys.argv) > 5 else 5
 
 
 def main() -> None:
+    from kafka_topic_analyzer_spark.operators import artifacts
     from kafka_topic_analyzer_spark.operators.pq import (
         pq_train,
         pq_train_distributed,
@@ -60,31 +58,14 @@ def main() -> None:
         cb = pq_train_distributed(emb, m=M, k=K, iters=ITERS)
     else:
         cb = pq_train(emb, m=M, k=K, iters=ITERS)
-    m, k, dsub = cb.shape
-    lines = [
-        '"""Fixed PQ codebooks (generated artifact).',
-        "",
-        f"Trained by tools/train_pq_codebooks.py on {SF_DIR} embeddings",
-        f"(m={M} subspaces, k={K} codes, iters={ITERS}, deterministic",
-        "seeds/ties — see operators/pq.pq_train). repr-exact doubles so",
-        'Spark and the DuckDB oracle parse identical IEEE-754 values."""',
-        "",
-        f"M = {m}",
-        f"K = {k}",
-        f"DSUB = {dsub}",
-        "",
-        "CODEBOOKS: tuple[tuple[tuple[float, ...], ...], ...] = (",
-    ]
-    for mi in range(m):
-        lines.append("    (")
-        for ki in range(k):
-            vals = ", ".join(repr(float(v)) for v in cb[mi, ki])
-            lines.append(f"        ({vals}),")
-        lines.append("    ),")
-    lines.append(")")
-    with open(OUT, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {OUT}: {m} x {k} x {dsub} codebooks")
+    path = artifacts.save(
+        NAME,
+        cb,
+        f"Trained by tools/train_pq_codebooks.py on {SF_DIR} embeddings "
+        f"(m={M} subspaces, k={K} codes, iters={ITERS}, deterministic "
+        "seeds/ties — see operators/pq.pq_train).",
+    )
+    print(f"wrote {path}: {' x '.join(map(str, cb.shape))} codebooks")
 
 
 if __name__ == "__main__":
