@@ -1,10 +1,13 @@
 """Metric expressions — the Spark analogue of the reference's MetricHandler.
 
 Each reference metric (SURVEY.md §2.4, reference ``src/metric.rs:206-253``)
-is a built-in Spark SQL aggregate Column. A "handler" here is just a list of
-Columns handed to one ``groupBy().agg()`` — Catalyst fuses them into a single
-partial+final aggregation pass, which is exactly the reference's one-pass
-observer design but distributed and codegen'd.
+is a built-in Spark SQL aggregate Column. The reference's MessageMetrics
+handler is :func:`partition_metric_aggs` / :func:`global_metric_aggs`: lists
+of Columns handed to one ``groupBy().agg()`` — Catalyst fuses them into a
+single partial+final aggregation pass, which is exactly the reference's
+one-pass observer design but distributed and codegen'd. The compaction
+handler is the alive-keys operator (operators/alive_keys.py); it groups by
+key, not partition, so it stays a separate job.
 
 All expressions use byte-length (``octet_length``) so BinaryType (real
 Kafka) and ASCII StringType (derived fixtures) behave identically.
@@ -12,11 +15,9 @@ Kafka) and ASCII StringType (derived fixtures) behave identically.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import Column, DataFrame, functions as F
 
-from kafka_topic_analyzer_spark.schema import KEY, OFFSET, PARTITION, TIMESTAMP_MS, VALUE
+from kafka_topic_analyzer_spark.schema import KEY, OFFSET, TIMESTAMP_MS, VALUE
 
 
 def key_len() -> Column:
@@ -37,41 +38,6 @@ def message_size() -> Column:
 def ts_seconds() -> Column:
     """Second-truncated epoch seconds; ms 0 == missing (ref src/metric.rs:209-210)."""
     return F.floor(F.col(TIMESTAMP_MS) / F.lit(1000)).cast("long")
-
-
-# ---------------------------------------------------------------------------
-# Metric-handler registry — the analogue of the reference's MetricHandler
-# trait + add_metric_handler (ref src/kafka.rs:18-20, 56-58): a "handler"
-# contributes aggregate Columns; every registered handler's columns are
-# fused into ONE groupBy().agg() pass, exactly like the reference fans one
-# message out to every handler in a single scan (ref src/kafka.rs:107-109)
-# — but distributed and codegen'd, with no per-row callback surface.
-# ---------------------------------------------------------------------------
-
-MetricHandler = Callable[[], list[Column]]
-
-_METRIC_HANDLERS: dict[str, MetricHandler] = {}
-
-
-def add_metric_handler(name: str, handler: MetricHandler) -> None:
-    """Register a named list-of-aggregates contributor."""
-    _METRIC_HANDLERS[name] = handler
-
-
-def remove_metric_handler(name: str) -> None:
-    _METRIC_HANDLERS.pop(name, None)
-
-
-def metric_handlers() -> dict[str, MetricHandler]:
-    return dict(_METRIC_HANDLERS)
-
-
-def handler_report(kdf: DataFrame, names: list[str] | None = None) -> DataFrame:
-    """Per-partition report over every (or the named) registered handlers —
-    all handlers' aggregates evaluated in one shuffle."""
-    selected = names if names is not None else list(_METRIC_HANDLERS)
-    cols = [c for n in selected for c in _METRIC_HANDLERS[n]()]
-    return kdf.groupBy(PARTITION).agg(*cols)
 
 
 def partition_metric_aggs() -> list[Column]:
@@ -155,9 +121,3 @@ def derived_partition_metrics(df: DataFrame) -> DataFrame:
         )
     )
 
-
-# The reference's two built-in handlers (ref src/main.rs:108-116):
-# MessageMetrics == the partition metric aggregates; the compaction handler
-# is the alive-keys operator (operators/alive_keys.py) — it needs a
-# different grouping (key, not partition) so it stays a separate job.
-add_metric_handler("message_metrics", partition_metric_aggs)

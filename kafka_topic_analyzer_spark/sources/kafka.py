@@ -1,10 +1,9 @@
-"""Real Kafka source — batch and streaming readers for the canonical frame.
+"""Real Kafka source — the batch reader for the canonical frame.
 
 Mirrors the reference's consumer setup (SURVEY.md §2.1 S1-S4):
 
 * one bounded pass earliest→latest (ref ``src/kafka.rs:74-137``) ==
-  batch ``startingOffsets=earliest / endingOffsets=latest``, or
-  ``readStream`` + ``Trigger.AvailableNow``;
+  batch ``startingOffsets=earliest / endingOffsets=latest``;
 * arbitrary ``key=value`` consumer-config passthrough
   (ref ``src/kafka.rs:38-42``, parsed at ``src/main.rs:84-92``) ==
   ``kafka.*`` options;
@@ -93,20 +92,6 @@ def read_topic(
     """Bounded batch scan of a whole topic (reference entry point 1)."""
     reader = spark.read.format("kafka")
     for k, v in kafka_options(bootstrap_servers, topic, consumer_config).items():
-        reader = reader.option(k, v)
-    return canonicalize_kafka_frame(reader.load())
-
-
-def read_topic_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    consumer_config: dict[str, str] | None = None,
-) -> DataFrame:
-    """Streaming scan; combine with Trigger.AvailableNow for bounded runs."""
-    reader = spark.readStream.format("kafka")
-    opts = kafka_options(bootstrap_servers, topic, consumer_config, ending_offsets=None)
-    for k, v in opts.items():
         reader = reader.option(k, v)
     return canonicalize_kafka_frame(reader.load())
 

@@ -15,11 +15,11 @@ Design — the two halves the engine already proved, composed:
   (operators/pq.ivfpq_index + pack_codes): rows (vec_id, cell,
   codes_packed), physically partitioned BY CELL — the unit a search
   touches, so it is also the unit an upsert should rewrite;
-* the **merge mechanics** are the bucketed-MERGE manifest discipline
-  (streaming/upsert_sink.merge_batch_bucketed): an epoch rewrites ONLY
-  the partitions it touches, publishes them with one atomic manifest
-  flip (os.replace), and a crash between write and flip is invisible
-  because readers resolve every path through the manifest.
+* the **merge mechanics** are the manifest store's publication protocol
+  (streaming/manifest.py, shared with upsert_sink.merge_batch_bucketed):
+  an epoch rewrites ONLY the partitions it touches, publishes them with
+  one atomic manifest flip, and a crash between write and flip is
+  invisible because readers resolve every path through the manifest.
 
 The one problem cell-keyed state adds over key-keyed state: a tombstone
 (vec_id, NULL) does not say WHICH cell holds the victim's codes, and an
@@ -48,55 +48,34 @@ batch), so a foreachBatch epoch replayed after a crash converges to the
 identical state (pinned in tests/test_index_upsert.py alongside the
 crash-invisibility and vacuum tests inherited from tests/test_sinks.py).
 
-READER CONTRACT (advisor r14): vacuum deletes superseded epoch dirs the
-instant the new manifest flips, so "readers resolve every path through
-the manifest" holds only for readers that RE-RESOLVE per read — a
-lazily-held DataFrame from :func:`read_postings`/:func:`read_directory`
-whose action runs after a subsequent merge can hit FileNotFoundException
-on the vacuumed paths. The supported deployment shapes are (a) a single
-writer whose readers call read_* per query (what every in-repo consumer
-does — the registered search materializes before the next epoch), or
-(b) long-lived concurrent readers with a retention window on vacuum
-(keep the last N superseded manifests' dirs) — not implemented here;
-see SCALING.md's snapshot discussion before running shape (b).
+READER CONTRACT (advisor r14): by default vacuum deletes superseded
+epoch dirs the instant the new manifest flips, so "readers resolve every
+path through the manifest" holds only for readers that RE-RESOLVE per
+read — a lazily-held DataFrame from :func:`read_postings`/
+:func:`read_directory` whose action runs after a subsequent merge can hit
+FileNotFoundException on the vacuumed paths. The supported deployment
+shapes are (a) a single writer whose readers call read_* per query (what
+every in-repo consumer does — the registered search materializes before
+the next epoch), or (b) long-lived concurrent readers with a retention
+window: ``merge_index_batch(retain_epochs=N)`` keeps the last N
+superseded manifests in the manifest's ``history`` and vacuum keeps every
+dir they reference, so a DataFrame resolved against any of them still
+scans.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kafka_topic_analyzer_spark.session import prepare_session
+from kafka_topic_analyzer_spark.streaming import manifest as store
+from kafka_topic_analyzer_spark.streaming.runner import run_available_now
 
-MANIFEST = "_MANIFEST"
 DEFAULT_DIR_BUCKETS = 16
-
-
-def _dir_bucket(n_buckets: int) -> F.Column:
-    """Deterministic directory bucket of vec_id: pmod(xxhash64, n) —
-    fixed seed, so a key's bucket never moves (upsert_sink._bucket_col
-    discipline)."""
-    return F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_buckets)).cast("int")
-
-
-def _read_manifest(index_dir: str) -> dict:
-    p = os.path.join(index_dir, MANIFEST)
-    if not os.path.exists(p):
-        return {"postings": {}, "directory": {}, "n_dir_buckets": None}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _flip_manifest(index_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(index_dir, f".{MANIFEST}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, os.path.join(index_dir, MANIFEST))  # atomic flip
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -106,11 +85,10 @@ def read_postings(spark: SparkSession, index_dir: str) -> DataFrame | None:
     a copy, ``_pcell``) so reading N leaf paths needs no basePath
     recovery and the search plan sees one multi-path scan, not an
     N-way union."""
-    manifest = _read_manifest(index_dir)
-    if not manifest["postings"]:
-        return None
-    paths = [os.path.join(index_dir, rel) for rel in manifest["postings"].values()]
-    return spark.read.parquet(*paths).select("vec_id", "cell", "codes_packed")
+    postings = store.read_table(spark, index_dir, "postings")
+    return None if postings is None else postings.select(
+        "vec_id", "cell", "codes_packed"
+    )
 
 
 def read_directory(
@@ -119,46 +97,8 @@ def read_directory(
     """(vec_id -> cell) directory; ``buckets`` prunes the read to only
     the named buckets' current dirs — the lookup an epoch pays is
     proportional to the batch's bucket set, never the key universe."""
-    manifest = _read_manifest(index_dir)
-    entries = manifest["directory"]
-    if buckets is not None:
-        entries = {str(b): rel for b in buckets if (rel := entries.get(str(b)))}
-    if not entries:
-        return None
-    paths = [os.path.join(index_dir, rel) for rel in entries.values()]
-    return spark.read.parquet(*paths).select("vec_id", "cell")
-
-
-def vacuum_index(index_dir: str) -> list[str]:
-    """Delete epoch dirs referenced by no manifest entry (superseded
-    epochs AND torn dirs from crashes between write and flip) —
-    upsert_sink.vacuum_state_bucketed, same retention rule.
-
-    Retention grace (r16, deployment shape (b) of the reader contract):
-    dirs referenced by the manifest's ``history`` snapshots — the last
-    ``retain_epochs`` superseded manifests, recorded at flip time by
-    :func:`merge_index_batch` — survive vacuum, so a DataFrame resolved
-    against manifest v-k (k <= retain_epochs) still scans after later
-    flips. History is bounded, so vacuum still bounds disk at
-    O(retain_epochs) superseded epochs."""
-    manifest = _read_manifest(index_dir)
-    referenced = {
-        rel.split(os.sep)[0]
-        for snapshot in [manifest, *manifest.get("history", [])]
-        for table in ("postings", "directory")
-        for rel in snapshot[table].values()
-    }
-    removed = []
-    for entry in os.listdir(index_dir):
-        path = os.path.join(index_dir, entry)
-        if (
-            entry.startswith("epoch_v")
-            and entry not in referenced
-            and os.path.isdir(path)
-        ):
-            shutil.rmtree(path)
-            removed.append(entry)
-    return sorted(removed)
+    directory = store.read_table(spark, index_dir, "directory", buckets)
+    return None if directory is None else directory.select("vec_id", "cell")
 
 
 def _encode(batch: DataFrame, centroids, codebooks) -> DataFrame:
@@ -195,26 +135,25 @@ def merge_index_batch(
     Rewrites ONLY: postings of cells the batch's keys leave or enter,
     and directory buckets of the batch's keys. One manifest flip
     publishes both tables atomically; vacuum collects superseded dirs.
+    Raises ValueError when the index was created with another
+    ``n_dir_buckets`` or another number of centroids.
 
     ``retain_epochs`` > 0 enables the retention-grace window for
     long-lived concurrent readers (reader-contract shape (b)): the flip
-    records the superseded manifest's table snapshots under ``history``
-    (most recent first, trimmed to ``retain_epochs``), and vacuum keeps
-    every dir those snapshots reference. Default 0 = the single-writer /
-    re-resolve-per-read contract, unchanged.
+    records the superseded manifest's tables under ``history`` (most
+    recent first, trimmed to ``retain_epochs``), and vacuum keeps every
+    dir those snapshots reference. Default 0 = the single-writer /
+    re-resolve-per-read contract.
     """
     spark = batch_df.sparkSession
-    manifest = _read_manifest(index_dir)
-    if manifest["n_dir_buckets"] not in (None, n_dir_buckets):
-        raise ValueError(
-            f"index at {index_dir} was created with n_dir_buckets="
-            f"{manifest['n_dir_buckets']}; got {n_dir_buckets}"
-        )
+    m = store.read(index_dir)
+    postings = store.table(m, "postings", len(centroids), option="nlist")
+    directory = store.table(m, "directory", n_dir_buckets, option="n_dir_buckets")
 
     from pyspark.sql import Observation
 
     latest = batch_df.select("vec_id", "embedding").withColumn(
-        "_dbucket", _dir_bucket(n_dir_buckets)
+        "_dbucket", store.bucket("vec_id", n_dir_buckets)
     )
     # several consumers below (old-cell lookup, encode, writes):
     # materialize once so the batch is read/encoded exactly once. The
@@ -288,7 +227,7 @@ def merge_index_batch(
         encoded, new_cells = f_enc.result()
     touched_cells = sorted(set(old_cells) | set(new_cells))
 
-    version = f"epoch_v{epoch_id:06d}_{uuid.uuid4().hex[:6]}"
+    version = store.epoch_version(epoch_id)
 
     # 3a/3b run as two CONCURRENT write jobs (distinct output dirs; the
     # manifest is only touched after both finish, so a failure in either
@@ -299,15 +238,9 @@ def merge_index_batch(
         # cells' files are never read, never written.
         if not touched_cells:
             return
-        cur_paths = [
-            os.path.join(index_dir, manifest["postings"][str(c)])
-            for c in touched_cells
-            if str(c) in manifest["postings"]
-        ]
-        if cur_paths:
-            current = spark.read.parquet(*cur_paths).select(
-                "vec_id", "cell", "codes_packed"
-            )
+        current = store.read_table(spark, index_dir, "postings", touched_cells)
+        if current is not None:
+            current = current.select("vec_id", "cell", "codes_packed")
             carried = current.join(latest.select("vec_id"), "vec_id", "left_anti")
             merged = carried.unionByName(encoded)
         else:
@@ -333,7 +266,7 @@ def merge_index_batch(
             merged_dir = encoded.select("vec_id", "cell")
         dir_out = os.path.join(index_dir, version, "directory")
         (
-            merged_dir.withColumn("_dpart", _dir_bucket(n_dir_buckets))
+            merged_dir.withColumn("_dpart", store.bucket("vec_id", n_dir_buckets))
             .repartition("_dpart")
             .sortWithinPartitions("vec_id")
             .write.partitionBy("_dpart")
@@ -345,40 +278,19 @@ def merge_index_batch(
         f_dir = pool.submit(inheritable_thread_target(spark)(_write_directory))
         f_post.result()
         f_dir.result()
-    # retention-grace bookkeeping BEFORE the entries mutate: the
-    # superseded snapshot is exactly what a reader holding the current
-    # manifest resolved its paths from
-    if retain_epochs > 0:
-        prior = {
-            "postings": dict(manifest["postings"]),
-            "directory": dict(manifest["directory"]),
-        }
-        history = [prior, *manifest.get("history", [])][:retain_epochs]
-    else:
-        history = []
-    for c in touched_cells:
-        rel = os.path.join(version, "postings", f"_pcell={c}")
-        if os.path.isdir(os.path.join(index_dir, rel)):
-            manifest["postings"][str(c)] = rel
-        else:
-            # cell emptied by tombstones/moves: drop from the manifest
-            manifest["postings"].pop(str(c), None)
-    for b in touched_buckets:
-        rel = os.path.join(version, "directory", f"_dpart={b}")
-        if os.path.isdir(os.path.join(index_dir, rel)):
-            manifest["directory"][str(b)] = rel
-        else:
-            manifest["directory"].pop(str(b), None)
-
     # 4. one atomic flip publishes postings + directory together — a
-    # reader can never observe postings without their directory epoch
-    manifest["n_dir_buckets"] = n_dir_buckets
-    if history:
-        manifest["history"] = history
-    else:
-        manifest.pop("history", None)
-    _flip_manifest(index_dir, manifest)
-    vacuum_index(index_dir)
+    # reader can never observe postings without their directory epoch.
+    # A cell emptied by tombstones/moves drops out of the manifest.
+    store.point_buckets(
+        index_dir, postings, os.path.join(version, "postings"), "_pcell",
+        touched_cells,
+    )
+    store.point_buckets(
+        index_dir, directory, os.path.join(version, "directory"), "_dpart",
+        touched_buckets,
+    )
+    store.flip(index_dir, m["tables"], retain_epochs)
+    store.vacuum(index_dir)
 
 
 def stream_upsert_ivfpq_index(
@@ -397,7 +309,7 @@ def stream_upsert_ivfpq_index(
     retention-grace window for concurrent readers."""
     prepare_session(spark)
     os.makedirs(index_dir, exist_ok=True)
-    query = (
+    run_available_now(
         batches.writeStream.foreachBatch(
             lambda df, eid: merge_index_batch(
                 df, index_dir, eid, centroids, codebooks, n_dir_buckets,
@@ -406,14 +318,7 @@ def stream_upsert_ivfpq_index(
         )
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_idx_upsert_"))
         .queryName(f"idx_upsert_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        query.awaitTermination()
-    finally:
-        if query.isActive:
-            query.stop()
 
 
 def knn_adc_packed_index(

@@ -21,7 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from kafka_topic_analyzer_spark.session import prepare_session
-from kafka_topic_analyzer_spark.streaming.runner import run_bounded_memory_stream
+from kafka_topic_analyzer_spark.streaming.runner import (
+    run_available_now,
+    run_bounded_memory_stream,
+)
 
 EMBEDDINGS_SCHEMA = T.StructType(
     [
@@ -180,23 +183,16 @@ def streaming_ivfpq_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ivfpq_index(batch_df, centroids, codebooks), len(codebooks)
         ).write.mode("append").partitionBy("cell").parquet(out_dir)
 
-    q = (
+    run_available_now(
         embeddings_stream(spark, sf_dir)
         .writeStream.foreachBatch(_append)
         .option(
             "checkpointLocation", tempfile.mkdtemp(prefix="ckpt_ivfpq_idx_")
         )
         .queryName(f"ivfpq_idx_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
     import shutil
 
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
     try:
         # materialize before deleting the files the plan reads — the
         # mkdtemp otherwise leaked one streamed index per invocation

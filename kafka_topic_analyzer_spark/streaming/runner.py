@@ -1,8 +1,11 @@
-"""Shared runner for bounded (AvailableNow) streaming twins.
+"""Shared runner for bounded (AvailableNow) streaming queries.
 
-Every batch-parity streaming query follows the same shape: write to a
-uniquely-named memory sink with a fresh checkpoint, run to completion,
-read the table back. The runner also right-sizes the STATE STORE count
+:func:`run_available_now` owns the bounded launch protocol (AvailableNow
+trigger, start, await, stop on every exit) for every streaming query in
+the package. Every batch-parity streaming twin follows one shape on top
+of it (:func:`run_bounded_memory_stream`): write to a uniquely-named
+memory sink with a fresh checkpoint, run to completion, read the table
+back. The runner also right-sizes the STATE STORE count
 for the bounded run: a stateful operator creates one state store per
 shuffle partition, and on bounded test inputs the per-store bring-up
 (checkpoint dirs, snapshot files, maintenance threads) dominates wall
@@ -28,10 +31,25 @@ import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from kafka_topic_analyzer_spark.session import scoped_shuffle_partitions
 
 BOUNDED_STATE_PARTITIONS = 8
+
+
+def run_available_now(writer: DataStreamWriter) -> list[dict]:
+    """Drain ``writer``'s source once (``Trigger.AvailableNow``), stop the
+    query even when the drain fails, and return its ``recentProgress``
+    (one dict per micro-batch). The writer carries its own sink,
+    checkpoint and name."""
+    query = writer.trigger(availableNow=True).start()
+    try:
+        query.awaitTermination()
+        return list(query.recentProgress)
+    finally:
+        if query.isActive:
+            query.stop()
 
 
 def run_bounded_memory_stream(
@@ -45,17 +63,10 @@ def run_bounded_memory_stream(
     table name (caller reads ``spark.table(name)``)."""
     name = f"q_{uuid.uuid4().hex[:12]}"
     with scoped_shuffle_partitions(spark, state_partitions):
-        query = (
+        run_available_now(
             df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
             .option("checkpointLocation", tempfile.mkdtemp(prefix=ckpt_prefix))
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            query.awaitTermination()
-        finally:
-            if query.isActive:
-                query.stop()
     return name

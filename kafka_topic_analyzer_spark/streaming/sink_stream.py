@@ -31,7 +31,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kafka_topic_analyzer_spark.functions.text import clean_text, md5_fingerprint
 from kafka_topic_analyzer_spark.session import prepare_session
+from kafka_topic_analyzer_spark.streaming import manifest as store
 from kafka_topic_analyzer_spark.streaming.dedup_stream import documents_stream
+from kafka_topic_analyzer_spark.streaming.runner import run_available_now
 
 # within_watermark mode: documents carry no timestamp, so event time is a
 # deterministic 1-hour-span derivation from doc_id (a real ingest uses the
@@ -93,18 +95,11 @@ def stream_curated_corpus(
             .parquet(out_path)
         )
 
-    query = (
+    run_available_now(
         curated.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_corpus_"))
         .queryName(f"corpus_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        query.awaitTermination()
-    finally:
-        if query.isActive:
-            query.stop()
 
     if reconcile:
         reconcile_corpus(spark, out_path, partition_by="lang")
@@ -195,19 +190,11 @@ def stream_training_corpus(
         )
         selected.select("fp").write.mode("append").parquet(fp_index)
 
-    query = (
+    progress = run_available_now(
         observed.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_training_"))
         .queryName(f"training_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        query.awaitTermination()
-        progress = list(query.recentProgress)
-    finally:
-        if query.isActive:
-            query.stop()
 
     counts = {"n_rows": 0, "n_null_text": 0, "n_quality_fail": 0, "n_sample_fail": 0}
     for p in progress:
@@ -317,36 +304,8 @@ def reconcile_corpus(
 # economics the bucketed MERGE proved (11.4x fewer bytes/epoch).
 # ---------------------------------------------------------------------------
 
-CORPUS_MANIFEST = "_MANIFEST"
+CORPUS = "corpus"
 CORPUS_BUCKETS = 256
-
-
-def _corpus_bucket(n_buckets: int) -> F.Column:
-    """Deterministic bucket of ``fp``: pmod(xxhash64, n) — fixed seed, so
-    a fingerprint's bucket never moves (upsert_sink._bucket_col
-    discipline) and ALL copies of a duplicated fp land in ONE bucket —
-    the property that makes per-bucket dedup exact without any
-    cross-bucket pass."""
-    return F.pmod(F.xxhash64(F.col("fp")), F.lit(n_buckets)).cast("int")
-
-
-def _read_corpus_manifest(corpus_dir: str) -> dict:
-    import json
-
-    p = os.path.join(corpus_dir, CORPUS_MANIFEST)
-    if not os.path.exists(p):
-        return {"buckets": {}, "n_buckets": None}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _flip_corpus_manifest(corpus_dir: str, manifest: dict) -> None:
-    import json
-
-    tmp = os.path.join(corpus_dir, f".{CORPUS_MANIFEST}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, os.path.join(corpus_dir, CORPUS_MANIFEST))  # atomic
 
 
 def append_corpus_epoch(
@@ -358,33 +317,22 @@ def append_corpus_epoch(
     MERGE, an epoch never rewrites prior data; compaction is the
     reconcile sweep's job). One atomic manifest flip publishes the epoch:
     a crash before the flip leaves an unreferenced dir the next sweep's
-    vacuum collects."""
+    vacuum collects. Buckets are ``fp`` hashes, so ALL copies of a
+    duplicated fp land in ONE bucket — the property that makes per-bucket
+    dedup exact without any cross-bucket pass."""
     if "fp" not in batch_df.columns:
         raise ValueError("append_corpus_epoch: batch must carry an fp column")
-    manifest = _read_corpus_manifest(corpus_dir)
-    if manifest["n_buckets"] not in (None, n_buckets):
-        raise ValueError(
-            f"corpus at {corpus_dir} uses n_buckets={manifest['n_buckets']};"
-            f" got {n_buckets}"
-        )
-    version = f"epoch_v{epoch_id:06d}_{uuid.uuid4().hex[:6]}"
-    out = os.path.join(corpus_dir, version)
+    m = store.read(corpus_dir)
+    buckets = store.table(m, CORPUS, n_buckets)
+    version = store.epoch_version(epoch_id)
     (
-        batch_df.withColumn("_cbucket", _corpus_bucket(n_buckets))
+        batch_df.withColumn("_cbucket", store.bucket("fp", n_buckets))
         .repartition("_cbucket")
         .write.partitionBy("_cbucket")
-        .parquet(out)
+        .parquet(os.path.join(corpus_dir, version))
     )
-    base = os.path.join(corpus_dir, version)
-    if os.path.isdir(base):
-        for entry in sorted(os.listdir(base)):
-            if entry.startswith("_cbucket="):
-                b = entry.split("=", 1)[1]
-                manifest["buckets"].setdefault(b, []).append(
-                    os.path.join(version, entry)
-                )
-    manifest["n_buckets"] = n_buckets
-    _flip_corpus_manifest(corpus_dir, manifest)
+    store.point_buckets(corpus_dir, buckets, version, "_cbucket")
+    store.flip(corpus_dir, m["tables"])
 
 
 def read_corpus_bucketed(
@@ -392,39 +340,7 @@ def read_corpus_bucketed(
 ) -> DataFrame | None:
     """Current corpus = union of every manifest-listed dir; ``buckets``
     prunes to the named buckets (the reconcile sweep's read path)."""
-    manifest = _read_corpus_manifest(corpus_dir)
-    entries = manifest["buckets"]
-    if buckets is not None:
-        wanted = {str(b) for b in buckets}
-        entries = {b: rels for b, rels in entries.items() if b in wanted}
-    paths = [
-        os.path.join(corpus_dir, rel) for rels in entries.values() for rel in rels
-    ]
-    return spark.read.parquet(*paths) if paths else None
-
-
-def vacuum_corpus_bucketed(corpus_dir: str) -> list[str]:
-    """Remove epoch/compact dirs referenced by no manifest entry
-    (superseded by compaction, or torn by a crash before the flip)."""
-    import shutil
-
-    manifest = _read_corpus_manifest(corpus_dir)
-    referenced = {
-        rel.split(os.sep)[0]
-        for rels in manifest["buckets"].values()
-        for rel in rels
-    }
-    removed = []
-    for entry in os.listdir(corpus_dir):
-        path = os.path.join(corpus_dir, entry)
-        if (
-            (entry.startswith("epoch_v") or entry.startswith("compact_v"))
-            and entry not in referenced
-            and os.path.isdir(path)
-        ):
-            shutil.rmtree(path)
-            removed.append(entry)
-    return sorted(removed)
+    return store.read_table(spark, corpus_dir, CORPUS, buckets)
 
 
 def reconcile_corpus_bucketed(
@@ -453,9 +369,10 @@ def reconcile_corpus_bucketed(
     rewrite it replaces (bench ``reconcile_economics`` measures the
     bytes-written ratio on the trickle case).
     """
-    manifest = _read_corpus_manifest(corpus_dir)
-    n_buckets = manifest["n_buckets"]
-    if not manifest["buckets"]:
+    m = store.read(corpus_dir)
+    corpus = m["tables"].get(CORPUS, {"n_buckets": None, "buckets": {}})
+    n_buckets = corpus["n_buckets"]
+    if not corpus["buckets"]:
         return {
             "n_before": 0,
             "n_after": 0,
@@ -476,7 +393,7 @@ def reconcile_corpus_bucketed(
         .groupBy("fp")
         .count()
         .where(F.col("count") > 1)
-        .select(_corpus_bucket(n_buckets).alias("_cbucket"))
+        .select(store.bucket("fp", n_buckets).alias("_cbucket"))
         .distinct()
         .collect()
     )
@@ -484,7 +401,7 @@ def reconcile_corpus_bucketed(
     if not dirty:
         # nothing to compact, but the sweep still collects torn dirs
         # left by ingest epochs that crashed before their manifest flip
-        vacuum_corpus_bucketed(corpus_dir)
+        store.vacuum(corpus_dir)
         return {
             "n_before": int(n_before),
             "n_after": int(n_before),
@@ -500,23 +417,17 @@ def reconcile_corpus_bucketed(
         *[F.min_by(c, F.col(order_col)).alias(c) for c in others]
     ).localCheckpoint(eager=True)  # two consumers: write + rows_rewritten
     rows_rewritten = keep.count()
-    version = f"compact_v{uuid.uuid4().hex[:10]}"
-    out = os.path.join(corpus_dir, version)
+    version = store.compact_version()
     (
-        keep.withColumn("_cbucket", _corpus_bucket(n_buckets))
+        keep.withColumn("_cbucket", store.bucket("fp", n_buckets))
         .repartition("_cbucket")
         .sortWithinPartitions(order_col)
         .write.partitionBy("_cbucket")
-        .parquet(out)
+        .parquet(os.path.join(corpus_dir, version))
     )
-    for b in dirty:
-        rel = os.path.join(version, f"_cbucket={b}")
-        if os.path.isdir(os.path.join(corpus_dir, rel)):
-            manifest["buckets"][str(b)] = [rel]
-        else:  # bucket held only rows of... cannot happen (keep >= 1/fp)
-            manifest["buckets"].pop(str(b), None)
-    _flip_corpus_manifest(corpus_dir, manifest)
-    vacuum_corpus_bucketed(corpus_dir)
+    store.point_buckets(corpus_dir, corpus["buckets"], version, "_cbucket", dirty)
+    store.flip(corpus_dir, m["tables"])
+    store.vacuum(corpus_dir)
 
     after = read_corpus_bucketed(spark, corpus_dir)
     n_after = after.count()

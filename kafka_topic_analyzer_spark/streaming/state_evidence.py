@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession, functions as F
 
 from kafka_topic_analyzer_spark.session import prepare_session, scoped_shuffle_partitions
 from kafka_topic_analyzer_spark.sources.tables import load_table
+from kafka_topic_analyzer_spark.streaming.runner import run_available_now
 
 NANOS_PER_DAY = 86_400 * 1_000_000_000
 
@@ -70,24 +71,17 @@ def _replay_chunks(
             ).write.mode("append").parquet(input_dir)
             # bounded state-store count, same rationale as runner.py
             with scoped_shuffle_partitions(spark, 8):
-                q = (
+                recent = run_available_now(
                     out.writeStream.format("noop")
                     .outputMode("append")
                     .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
                 )
-                try:
-                    q.awaitTermination()
-                finally:
-                    if q.isActive:
-                        q.stop()
-            progress = [p for p in q.recentProgress if p.get("stateOperators")]
+            progress = [p for p in recent if p.get("stateOperators")]
             if not progress:
                 stats.append(TriggerStats(i, 0, 0, 0, 0))
                 continue
             last = progress[-1]["stateOperators"][0]
-            n_in = sum(int(p.get("numInputRows", 0)) for p in q.recentProgress)
+            n_in = sum(int(p.get("numInputRows", 0)) for p in recent)
             removed = sum(
                 int(p["stateOperators"][0].get("numRowsRemoved", 0)) for p in progress
             )
@@ -377,20 +371,13 @@ def dedup_late_replay(
                 (F.col("arrival_ts") >= lo_i) & (F.col("arrival_ts") < lo_i + chunk)
             ).coalesce(1).write.mode("append").parquet(input_dir)
             with scoped_shuffle_partitions(spark, 8):
-                q = (
+                recent = run_available_now(
                     stream.writeStream.format("parquet")
                     .outputMode("append")
                     .option("path", out_dir)
                     .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
                 )
-                try:
-                    q.awaitTermination()
-                finally:
-                    if q.isActive:
-                        q.stop()
-            progress = [p for p in q.recentProgress if p.get("stateOperators")]
+            progress = [p for p in recent if p.get("stateOperators")]
             if progress:
                 last = progress[-1]["stateOperators"][0]
                 state_rows.append(int(last.get("numRowsTotal", 0)))

@@ -3,27 +3,26 @@
 Lakehouse MERGE INTO needs Delta/Iceberg jars (not in this image); the
 classic emulation is per-epoch anti-join + union: new batch rows replace
 same-keyed rows, everything else carries over. ``foreachBatch`` gives the
-per-epoch hook and epoch-versioned directories give atomic publication —
-each epoch writes a complete new version dir, then a tiny `_LATEST`
-pointer flips; readers never observe a half-written state (the rename of
-a pointer file is the atomic unit, same trick as Delta's _last_checkpoint).
+per-epoch hook and the manifest store (streaming/manifest.py) gives
+atomic publication — each epoch writes new version dirs, then the
+``_MANIFEST`` flips; readers never observe a half-written state and
+superseded versions are vacuumed after the flip.
 
-Two merge modes:
+Two merge modes, one ``state`` table in the store:
 
-* **full** (:func:`merge_batch`) — each epoch rewrites the full state.
-  Correct but O(distinct keys) per batch; fine for compacted states that
-  fit a rewrite budget.
+* **full** (:func:`merge_batch`) — each epoch rewrites the full state as
+  a one-bucket table. Correct but O(distinct keys) per batch; fine for
+  compacted states that fit a rewrite budget.
 * **bucketed** (:func:`merge_batch_bucketed`, r12 — the incremental-MERGE
   upgrade the r11 judge flagged as the next owner's move): keys hash into
   ``n_buckets`` fixed buckets; an epoch rewrites ONLY the buckets its
-  batch touches and flips a per-bucket manifest (`_MANIFEST`, a tiny JSON
-  mapping bucket -> current version dir; os.replace of the manifest is
-  the atomic unit). Per-epoch cost becomes O(touched buckets' keys +
-  batch) instead of O(all keys) — on a 100 TB keyed state with a trickle
-  of updates that is the difference between rewriting everything per
-  trigger and rewriting ~batch/n_buckets of it. This is exactly the
-  mechanism lakehouse MERGE uses (rewrite only affected files, atomic
-  metadata flip), re-expressed with plain parquet + a manifest.
+  batch touches and repoints only those buckets in the manifest.
+  Per-epoch cost becomes O(touched buckets' keys + batch) instead of
+  O(all keys) — on a 100 TB keyed state with a trickle of updates that
+  is the difference between rewriting everything per trigger and
+  rewriting ~batch/n_buckets of it. This is exactly the mechanism
+  lakehouse MERGE uses (rewrite only affected files, atomic metadata
+  flip), re-expressed with plain parquet + a manifest.
 """
 
 from __future__ import annotations
@@ -35,21 +34,21 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kafka_topic_analyzer_spark.session import prepare_session
+from kafka_topic_analyzer_spark.streaming import manifest as store
+from kafka_topic_analyzer_spark.streaming.runner import run_available_now
 
-LATEST_POINTER = "_LATEST"
-
-
-def _latest_version_dir(state_dir: str) -> str | None:
-    p = os.path.join(state_dir, LATEST_POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return os.path.join(state_dir, f.read().strip())
+STATE = "state"
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    v = _latest_version_dir(state_dir)
-    return spark.read.parquet(v) if v else None
+    """Current state = union of each bucket's manifest-current dir (one
+    dir in full mode); None before the first merge or once every key is
+    deleted."""
+    return store.read_table(spark, state_dir, STATE)
+
+
+# both merge modes publish the same ``state`` table
+read_state_bucketed = read_state
 
 
 def _latest_per_key(batch_df: DataFrame) -> DataFrame:
@@ -69,8 +68,12 @@ def _latest_per_key(batch_df: DataFrame) -> DataFrame:
 def merge_batch(batch_df: DataFrame, state_dir: str, epoch_id: int) -> None:
     """Upsert one micro-batch into the state: latest row per key wins
     within the batch (``_latest_per_key`` — no window); batch keys
-    replace state keys; tombstones (NULL value) delete."""
+    replace state keys; tombstones (NULL value) delete. The new full
+    state is published as the one bucket of a one-bucket table, and the
+    superseded version is vacuumed after the flip."""
     spark = batch_df.sparkSession
+    m = store.read(state_dir)
+    buckets = store.table(m, STATE, 1)
     latest_per_key = _latest_per_key(batch_df)
     current = read_state(spark, state_dir)
     if current is not None:
@@ -80,12 +83,11 @@ def merge_batch(batch_df: DataFrame, state_dir: str, epoch_id: int) -> None:
         merged = latest_per_key
     merged = merged.where(F.col("value").isNotNull())  # tombstone = delete
 
-    version = f"v{epoch_id:06d}_{uuid.uuid4().hex[:6]}"
+    version = store.epoch_version(epoch_id)
     merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-    tmp = os.path.join(state_dir, f".{LATEST_POINTER}.tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(state_dir, LATEST_POINTER))  # atomic flip
+    buckets["0"] = [version]
+    store.flip(state_dir, m["tables"])
+    store.vacuum(state_dir)
 
 
 def stream_upsert_compacted_state(
@@ -95,66 +97,18 @@ def stream_upsert_compacted_state(
     keyed state table."""
     prepare_session(spark)
     os.makedirs(state_dir, exist_ok=True)
-    query = (
+    run_available_now(
         kafka_stream.writeStream.foreachBatch(
             lambda df, eid: merge_batch(df, state_dir, eid)
         )
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsert_"))
         .queryName(f"upsert_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        query.awaitTermination()
-    finally:
-        if query.isActive:
-            query.stop()
 
 
 # ---------------------------------------------------------------------------
 # Bucketed incremental MERGE (r12)
 # ---------------------------------------------------------------------------
-
-MANIFEST = "_MANIFEST"
-MANIFEST_HISTORY = "_MANIFEST_HISTORY"
-
-
-def _read_history(state_dir: str) -> list[dict[str, str]]:
-    """Superseded-manifest snapshots (most recent first) kept for the
-    retention-grace window; absent sidecar = no retention (default)."""
-    import json
-
-    p = os.path.join(state_dir, MANIFEST_HISTORY)
-    if not os.path.exists(p):
-        return []
-    with open(p) as f:
-        return json.load(f)
-
-
-def _bucket_col(n_buckets: int) -> F.Column:
-    """Deterministic bucket of ``key``: pmod(xxhash64, n) — stable across
-    runs/machines (fixed seed), so a key's bucket never moves and carried
-    rows can recompute it instead of storing it."""
-    return F.pmod(F.xxhash64(F.col("key")), F.lit(n_buckets)).cast("int")
-
-
-def _read_manifest(state_dir: str) -> dict[str, str]:
-    import json
-
-    p = os.path.join(state_dir, MANIFEST)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-def read_state_bucketed(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Current state = union of each bucket's manifest-current dir."""
-    manifest = _read_manifest(state_dir)
-    if not manifest:
-        return None
-    paths = [os.path.join(state_dir, rel) for rel in manifest.values()]
-    return spark.read.parquet(*paths)
 
 
 def merge_batch_bucketed(
@@ -175,111 +129,52 @@ def merge_batch_bucketed(
     5. the manifest (bucket -> version dir) flips atomically; a bucket
        emptied by tombstones drops out of the manifest.
 
-    ``retain_epochs`` > 0 enables a retention-grace window (r16): the
-    last N superseded manifests are recorded in a ``_MANIFEST_HISTORY``
-    sidecar (the manifest file format itself is unchanged) and vacuum
-    keeps every version dir they reference, so a reader holding a
-    DataFrame resolved against a recent manifest still scans after
-    later flips. Default 0 = single-writer contract, unchanged.
-    """
-    import json
+    Raises ValueError when the state was created with another
+    ``n_buckets`` (every key would hash into a differently numbered
+    bucket).
 
+    ``retain_epochs`` > 0 enables a retention-grace window (r16): the
+    last N superseded manifests stay in the manifest's ``history`` and
+    vacuum keeps every version dir they reference, so a reader holding a
+    DataFrame resolved against a recent manifest still scans after later
+    flips. Default 0 = single-writer contract.
+    """
     from pyspark.sql import Observation
 
     spark = batch_df.sparkSession
+    m = store.read(state_dir)
+    buckets = store.table(m, STATE, n_buckets)
     # the touched-bucket census rides the checkpoint job as an observed
     # metric (r16) — one job per epoch instead of checkpoint + collect
     obs_touched = Observation()
     latest = (
         _latest_per_key(batch_df)
-        .withColumn("_bucket", _bucket_col(n_buckets))
+        .withColumn("_bucket", store.bucket("key", n_buckets))
         .observe(obs_touched, F.collect_set("_bucket").alias("buckets"))
         .localCheckpoint(eager=True)  # two consumers: touched set + merge
     )
     touched = sorted(obs_touched.get["buckets"])
-    manifest = _read_manifest(state_dir)
     if not touched:
         return  # empty batch: nothing to rewrite, manifest stays
-    cur_paths = [
-        os.path.join(state_dir, manifest[str(b)])
-        for b in touched
-        if str(b) in manifest
-    ]
-    if cur_paths:
-        current = spark.read.parquet(*cur_paths)
+    current = store.read_table(spark, state_dir, STATE, touched)
+    if current is not None:
         carried = current.join(latest.select("key"), "key", "left_anti").withColumn(
-            "_bucket", _bucket_col(n_buckets)
+            "_bucket", store.bucket("key", n_buckets)
         )
         merged = carried.unionByName(latest)
     else:
         merged = latest
     merged = merged.where(F.col("value").isNotNull())  # tombstone = delete
 
-    version = f"epoch_v{epoch_id:06d}_{uuid.uuid4().hex[:6]}"
+    version = store.epoch_version(epoch_id)
     out = os.path.join(state_dir, version)
     merged.repartition("_bucket").write.partitionBy("_bucket").parquet(out)
-    # retention-grace snapshot BEFORE the entries mutate (r16): what a
-    # reader holding the current manifest resolved its paths from
-    history = (
-        [dict(manifest), *_read_history(state_dir)][:retain_epochs]
-        if retain_epochs > 0
-        else []
-    )
-    for b in touched:
-        rel = os.path.join(version, f"_bucket={b}")
-        if os.path.isdir(os.path.join(state_dir, rel)):
-            manifest[str(b)] = rel
-        else:
-            manifest.pop(str(b), None)  # bucket emptied by tombstones
-    hist_p = os.path.join(state_dir, MANIFEST_HISTORY)
-    if history:
-        tmp_h = os.path.join(state_dir, f".{MANIFEST_HISTORY}.tmp")
-        with open(tmp_h, "w") as f:
-            json.dump(history, f, sort_keys=True)
-        os.replace(tmp_h, hist_p)
-    elif os.path.exists(hist_p):
-        os.remove(hist_p)
-    tmp = os.path.join(state_dir, f".{MANIFEST}.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, sort_keys=True)
-    os.replace(tmp, os.path.join(state_dir, MANIFEST))  # atomic flip
+    store.point_buckets(state_dir, buckets, version, "_bucket", touched)
+    store.flip(state_dir, m["tables"], retain_epochs)
     # A long-running trickle stream would otherwise grow state_dir without
     # bound (every epoch leaves its superseded bucket files behind once
-    # the manifest pointer moves — advisor r12). Safe AFTER the flip:
-    # readers resolve paths through the manifest, and a version dir no
-    # manifest entry references (including torn dirs from a crash between
-    # write and flip) can never be read again.
-    vacuum_state_bucketed(state_dir)
-
-
-def vacuum_state_bucketed(state_dir: str) -> list[str]:
-    """Delete epoch version dirs no longer referenced by any manifest
-    entry; returns the removed dir names. Idempotent — the recovery /
-    retention rule for the bucketed MERGE (SCALING.md streaming section):
-    live state is exactly the manifest's current bucket dirs, everything
-    else is garbage from superseded epochs or crashed (never-flipped)
-    writes. Dirs referenced by the retention-grace history sidecar
-    (r16, see :func:`merge_batch_bucketed`) also survive — the sidecar
-    is bounded at ``retain_epochs`` snapshots, so disk stays bounded."""
-    import shutil
-
-    manifest = _read_manifest(state_dir)
-    referenced = {
-        rel.split(os.sep)[0]
-        for snapshot in [manifest, *_read_history(state_dir)]
-        for rel in snapshot.values()
-    }
-    removed = []
-    for entry in os.listdir(state_dir):
-        path = os.path.join(state_dir, entry)
-        if (
-            entry.startswith("epoch_v")
-            and entry not in referenced
-            and os.path.isdir(path)
-        ):
-            shutil.rmtree(path)
-            removed.append(entry)
-    return sorted(removed)
+    # the manifest pointer moves — advisor r12).
+    store.vacuum(state_dir)
 
 
 def stream_upsert_compacted_state_bucketed(
@@ -291,17 +186,10 @@ def stream_upsert_compacted_state_bucketed(
     """Run the bounded upsert ingest in bucketed-incremental mode."""
     prepare_session(spark)
     os.makedirs(state_dir, exist_ok=True)
-    query = (
+    run_available_now(
         kafka_stream.writeStream.foreachBatch(
             lambda df, eid: merge_batch_bucketed(df, state_dir, eid, n_buckets)
         )
         .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_upsertb_"))
         .queryName(f"upsertb_{uuid.uuid4().hex[:12]}")
-        .trigger(availableNow=True)
-        .start()
     )
-    try:
-        query.awaitTermination()
-    finally:
-        if query.isActive:
-            query.stop()

@@ -19,6 +19,7 @@ from kafka_topic_analyzer_spark.functions.vectors import as_double
 from kafka_topic_analyzer_spark.operators import artifacts
 from kafka_topic_analyzer_spark.sources.tables import load_table
 from kafka_topic_analyzer_spark.streaming import index_upsert as IU
+from kafka_topic_analyzer_spark.streaming import manifest as store
 
 CENTROIDS = artifacts.load("ivf_centroids_v1")
 CODEBOOKS = artifacts.load("pq_codebooks_v1")
@@ -111,7 +112,7 @@ def test_delete_rewrites_only_victim_cells(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
     os.makedirs(index_dir)
     IU.merge_index_batch(base, index_dir, 0, CENTROIDS, CODEBOOKS)
-    m0 = IU._read_manifest(index_dir)
+    m0 = store.read(index_dir)["tables"]
 
     # tombstone ONE existing key; find its cell from the directory
     victim = 42
@@ -124,13 +125,14 @@ def test_delete_rewrites_only_victim_cells(spark, tmp_path):
         [(victim, None)], "vec_id long, embedding array<double>"
     )
     IU.merge_index_batch(tomb, index_dir, 1, CENTROIDS, CODEBOOKS)
-    m1 = IU._read_manifest(index_dir)
+    p0 = m0["postings"]["buckets"]
+    p1 = store.read(index_dir)["tables"]["postings"]["buckets"]
 
-    assert m1["postings"][str(vic_cell)] != m0["postings"][str(vic_cell)]
-    untouched = [c for c in m0["postings"] if c != str(vic_cell)]
+    assert p1[str(vic_cell)] != p0[str(vic_cell)]
+    untouched = [c for c in p0 if c != str(vic_cell)]
     assert untouched
     for c in untouched:
-        assert m1["postings"][c] == m0["postings"][c], f"cell {c} rewritten"
+        assert p1[c] == p0[c], f"cell {c} rewritten"
     # and the victim is gone from postings AND directory
     assert IU.read_postings(spark, index_dir).where(
         F.col("vec_id") == victim
@@ -271,12 +273,12 @@ def test_empty_batch_is_a_noop(spark, tmp_path):
     index_dir = str(tmp_path / "idx")
     os.makedirs(index_dir)
     IU.merge_index_batch(base, index_dir, 0, CENTROIDS, CODEBOOKS)
-    m0 = IU._read_manifest(index_dir)
+    m0 = store.read(index_dir)
     dirs0 = sorted(os.listdir(index_dir))
 
     empty = base.where(F.lit(False))
     IU.merge_index_batch(empty, index_dir, 1, CENTROIDS, CODEBOOKS)
-    assert IU._read_manifest(index_dir) == m0
+    assert store.read(index_dir) == m0
     assert sorted(os.listdir(index_dir)) == dirs0
 
 
@@ -287,3 +289,42 @@ def test_mismatched_bucket_count_is_refused(spark, tmp_path):
     IU.merge_index_batch(base, index_dir, 0, CENTROIDS, CODEBOOKS, n_dir_buckets=8)
     with pytest.raises(ValueError, match="n_dir_buckets"):
         IU.merge_index_batch(base, index_dir, 1, CENTROIDS, CODEBOOKS, n_dir_buckets=16)
+
+
+def test_index_retention_grace_stale_reader(spark, tmp_path):
+    """With retain_epochs=1 a reader holding a DataFrame resolved against
+    the PREVIOUS manifest survives one more flip; a second flip retires
+    the oldest epoch's dirs (disk stays bounded)."""
+    base = _base(spark)
+    index_dir = str(tmp_path / "idx")
+    os.makedirs(index_dir)
+    IU.merge_index_batch(base, index_dir, 0, CENTROIDS, CODEBOOKS, retain_epochs=1)
+
+    stale = IU.read_postings(spark, index_dir)  # resolved against manifest v0
+    n0 = stale.count()
+
+    # update EVERY key so each flip repoints every cell/bucket: epoch-0
+    # dirs then survive only through the grace history, which is exactly
+    # what the window assertions below need to observe
+    upd = base.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x * F.lit(0.5)).alias("embedding"),
+    )
+    IU.merge_index_batch(upd, index_dir, 1, CENTROIDS, CODEBOOKS, retain_epochs=1)
+    # epoch-0 dirs are superseded but inside the grace window: the held
+    # plan still scans and still sees the pre-flip content
+    assert stale.count() == n0
+
+    epochs = lambda: {  # noqa: E731
+        e.split("_")[1] for e in os.listdir(index_dir) if e.startswith("epoch_v")
+    }
+    assert "v000000" in epochs()
+
+    IU.merge_index_batch(upd, index_dir, 2, CENTROIDS, CODEBOOKS, retain_epochs=1)
+    # window slid: epoch-0 dirs are gone, epoch-1's grace dirs remain
+    assert "v000000" not in epochs()
+    assert "v000001" in epochs()
+
+    # the CURRENT index is unaffected by retention bookkeeping
+    cur = IU.read_postings(spark, index_dir)
+    assert cur.count() == n0

@@ -1,8 +1,6 @@
-"""S7 progress reporting + §2.11 metric-handler registry tests."""
+"""S7 progress reporting tests."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
 
@@ -41,31 +39,3 @@ def test_streaming_progress_listener(spark):
         assert sum(p["num_input_rows"] for p in listener.progress) > 0
     finally:
         spark.streams.removeListener(listener)
-
-
-def test_metric_handler_registry(spark):
-    from kafka_topic_analyzer_spark.functions.metrics import (
-        add_metric_handler,
-        handler_report,
-        metric_handlers,
-        remove_metric_handler,
-    )
-    from kafka_topic_analyzer_spark.sources.events_log import kafka_frame_from_events
-
-    kdf = kafka_frame_from_events(spark, SF_SMOKE)
-    assert "message_metrics" in metric_handlers()
-
-    # custom handler fuses into the same aggregation pass
-    add_metric_handler(
-        "ts_range", lambda: [F.max("timestamp_ms").alias("max_ts_ms")]
-    )
-    try:
-        row = handler_report(kdf).orderBy("partition").first()
-        assert row["total"] > 0  # from message_metrics
-        assert row["max_ts_ms"] is not None  # from the custom handler
-        # single aggregation: exactly one Aggregate subtree pair in the plan
-        plan = handler_report(kdf)._jdf.queryExecution().optimizedPlan().toString()
-        assert plan.count("Aggregate") == 1
-    finally:
-        remove_metric_handler("ts_range")
-    assert "ts_range" not in metric_handlers()

@@ -1,18 +1,12 @@
 """Round-16 optimization pins.
 
-1. connected_components' observe-based convergence (label-sum
-   monotonicity) on graphs that need MULTIPLE two-hop batches, and on
-   the empty graph — the two shapes where a broken convergence rule
-   would either under-iterate (wrong labels) or run into the hop cap.
-2. Retention-grace vacuum (reader-contract shape (b)) for BOTH manifest
-   stores: a DataFrame resolved against a superseded manifest still
-   scans while the window holds, and dirs beyond the window are still
-   collected (disk stays bounded).
+connected_components' observe-based convergence (label-sum
+monotonicity) on graphs that need MULTIPLE two-hop batches, and on the
+empty graph — the two shapes where a broken convergence rule would
+either under-iterate (wrong labels) or run into the hop cap.
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -76,102 +70,6 @@ def test_cc_two_cliques_and_empty_graph(spark):
 def _emb_base(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     return emb.select("vec_id", as_double(F.col("embedding")).alias("embedding"))
-
-
-def test_index_retention_grace_stale_reader(spark, tmp_path):
-    """With retain_epochs=1 a reader holding a DataFrame resolved against
-    the PREVIOUS manifest survives one more flip; a second flip retires
-    the oldest epoch's dirs (disk stays bounded)."""
-    from kafka_topic_analyzer_spark.streaming import index_upsert as IU
-
-    base = _emb_base(spark)
-    index_dir = str(tmp_path / "idx")
-    os.makedirs(index_dir)
-    IU.merge_index_batch(base, index_dir, 0, CENTROIDS, CODEBOOKS, retain_epochs=1)
-
-    stale = IU.read_postings(spark, index_dir)  # resolved against manifest v0
-    n0 = stale.count()
-
-    # update EVERY key so each flip repoints every cell/bucket: epoch-0
-    # dirs then survive only through the grace history, which is exactly
-    # what the window assertions below need to observe
-    upd = base.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x * F.lit(0.5)).alias("embedding"),
-    )
-    IU.merge_index_batch(upd, index_dir, 1, CENTROIDS, CODEBOOKS, retain_epochs=1)
-    # epoch-0 dirs are superseded but inside the grace window: the held
-    # plan still scans and still sees the pre-flip content
-    assert stale.count() == n0
-
-    epochs = lambda: {  # noqa: E731
-        e.split("_")[1] for e in os.listdir(index_dir) if e.startswith("epoch_v")
-    }
-    assert "v000000" in epochs()
-
-    IU.merge_index_batch(upd, index_dir, 2, CENTROIDS, CODEBOOKS, retain_epochs=1)
-    # window slid: epoch-0 dirs are gone, epoch-1's grace dirs remain
-    assert "v000000" not in epochs()
-    assert "v000001" in epochs()
-
-    # the CURRENT index is unaffected by retention bookkeeping
-    cur = IU.read_postings(spark, index_dir)
-    assert cur.count() == n0
-
-
-def test_bucketed_retention_grace_stale_reader(spark, tmp_path):
-    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        merge_batch_bucketed,
-        read_state_bucketed,
-    )
-
-    def batch(epoch, value):
-        return spark.createDataFrame(
-            [("k1", 0, epoch, value)],
-            "key string, partition int, offset long, value string",
-        )
-
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    merge_batch_bucketed(batch(0, "a"), state, 0, n_buckets=4, retain_epochs=1)
-    stale = read_state_bucketed(spark, state)  # resolved against manifest v0
-
-    merge_batch_bucketed(batch(1, "b"), state, 1, n_buckets=4, retain_epochs=1)
-    # grace window: the superseded epoch-0 file still scans (old content)
-    assert [r["value"] for r in stale.collect()] == ["a"]
-
-    epochs = lambda: {  # noqa: E731
-        e.split("_")[1] for e in os.listdir(state) if e.startswith("epoch_v")
-    }
-    assert "v000000" in epochs()
-
-    merge_batch_bucketed(batch(2, "c"), state, 2, n_buckets=4, retain_epochs=1)
-    assert "v000000" not in epochs()  # beyond the window: collected
-    assert "v000001" in epochs()  # inside the window: retained
-    assert [r["value"] for r in read_state_bucketed(spark, state).collect()] == ["c"]
-
-
-def test_bucketed_default_retention_unchanged(spark, tmp_path):
-    """retain_epochs=0 (default) keeps the r12 behavior byte-for-byte:
-    superseded dirs vanish at the next flip and no sidecar appears."""
-    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        MANIFEST_HISTORY,
-        merge_batch_bucketed,
-    )
-
-    def batch(epoch, value):
-        return spark.createDataFrame(
-            [("k1", 0, epoch, value)],
-            "key string, partition int, offset long, value string",
-        )
-
-    state = str(tmp_path / "state")
-    os.makedirs(state)
-    merge_batch_bucketed(batch(0, "a"), state, 0, n_buckets=4)
-    merge_batch_bucketed(batch(1, "b"), state, 1, n_buckets=4)
-    epochs = {e.split("_")[1] for e in os.listdir(state) if e.startswith("epoch_v")}
-    assert epochs == {"v000001"}
-    assert not os.path.exists(os.path.join(state, MANIFEST_HISTORY))
 
 
 def test_adaptive_search_pins_corpus_pass_once(spark):

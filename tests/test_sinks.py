@@ -9,6 +9,19 @@ import os
 from tests.conftest import SF_SMOKE
 
 
+def _state_buckets(state_dir):
+    """bucket -> dirs of the upsert ``state`` table in the manifest store."""
+    from kafka_topic_analyzer_spark.streaming import manifest as store
+
+    return store.read(state_dir)["tables"]["state"]["buckets"]
+
+
+def _kv_batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "key string, partition int, offset long, value string"
+    )
+
+
 def test_write_parquet_shards_layout(spark, tmp_path):
     from kafka_topic_analyzer_spark.sources.sinks import write_parquet_shards
     from kafka_topic_analyzer_spark.sources.tables import load_table
@@ -331,9 +344,47 @@ def test_streaming_upsert_merge_equals_batch_compaction(spark, tmp_path):
         for r in latest.where(F.col("value").isNotNull()).collect()
     }
     assert got == want and got
-    # multiple epochs actually ran: more than one version dir exists
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
-    assert len(versions) >= 2
+    # multiple epochs actually ran: the one live version is a later epoch's
+    versions = [d for d in os.listdir(state_dir) if d.startswith("epoch_v")]
+    assert len(versions) == 1 and int(versions[0][len("epoch_v"):][:6]) >= 1
+
+
+def test_full_merge_vacuums_superseded_versions(spark, tmp_path):
+    """Full-mode merge writes a complete state copy per epoch; the flip
+    must be followed by a vacuum, so after three epochs exactly one
+    version dir remains and it holds the latest rows."""
+    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
+        merge_batch,
+        read_state,
+    )
+
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    merge_batch(_kv_batch(spark, [("a", 0, 0, "a0"), ("b", 0, 1, "b0")]), state, 0)
+    merge_batch(_kv_batch(spark, [("a", 0, 2, "a1")]), state, 1)
+    merge_batch(_kv_batch(spark, [("b", 0, 3, None), ("c", 0, 4, "c2")]), state, 2)
+    dirs = [d for d in os.listdir(state) if os.path.isdir(os.path.join(state, d))]
+    assert len(dirs) == 1, dirs
+    got = {(r["key"], r["value"]) for r in read_state(spark, state).collect()}
+    assert got == {("a", "a1"), ("c", "c2")}
+
+
+def test_bucketed_upsert_refuses_changed_bucket_count(spark, tmp_path):
+    """A second epoch with another n_buckets would hash keys into
+    differently numbered buckets, read the wrong buckets' files and leave
+    the old copies of its keys behind — the merge must refuse it."""
+    import pytest
+
+    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
+        merge_batch_bucketed,
+    )
+
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    rows = [(f"k{i}", 0, i, f"v{i}") for i in range(32)]
+    merge_batch_bucketed(_kv_batch(spark, rows), state, 0, n_buckets=4)
+    with pytest.raises(ValueError, match="n_buckets=4; got 8"):
+        merge_batch_bucketed(_kv_batch(spark, rows), state, 1, n_buckets=8)
 
 
 def test_bucketed_upsert_equals_full_rewrite(spark, tmp_path):
@@ -392,7 +443,6 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     import os
 
     from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        _read_manifest,
         merge_batch_bucketed,
         read_state_bucketed,
     )
@@ -405,7 +455,7 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         "key string, partition int, offset long, value string",
     )
     merge_batch_bucketed(seed, state, 0, n_buckets=n_buckets)
-    m0 = _read_manifest(state)
+    m0 = _state_buckets(state)
     assert len(m0) == n_buckets, "seed must populate every bucket"
 
     one = spark.createDataFrame(
@@ -413,7 +463,7 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         "key string, partition int, offset long, value string",
     )
     merge_batch_bucketed(one, state, 1, n_buckets=n_buckets)
-    m1 = _read_manifest(state)
+    m1 = _state_buckets(state)
     changed = {b for b in m1 if m1[b] != m0.get(b)}
     assert len(changed) == 1, f"one key must touch one bucket: {changed}"
     epoch1_dirs = [d for d in os.listdir(state) if d.startswith("epoch_v000001")]
@@ -431,10 +481,8 @@ def test_bucketed_upsert_tombstone_can_empty_a_bucket(spark, tmp_path):
     manifest entirely (the delete path of the MERGE)."""
     import os
 
-    from pyspark.sql import functions as F
+    from kafka_topic_analyzer_spark.streaming.manifest import bucket
     from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        _bucket_col,
-        _read_manifest,
         merge_batch_bucketed,
         read_state_bucketed,
     )
@@ -450,7 +498,7 @@ def test_bucketed_upsert_tombstone_can_empty_a_bucket(spark, tmp_path):
     # find every key in bucket 0 and tombstone them all
     keys_b0 = [
         r["key"]
-        for r in seed.withColumn("_b", _bucket_col(n_buckets))
+        for r in seed.withColumn("_b", bucket("key", n_buckets))
         .where("_b = 0")
         .select("key")
         .collect()
@@ -461,11 +509,10 @@ def test_bucketed_upsert_tombstone_can_empty_a_bucket(spark, tmp_path):
         "key string, partition int, offset long, value string",
     )
     merge_batch_bucketed(tomb, state, 1, n_buckets=n_buckets)
-    m = _read_manifest(state)
-    assert "0" not in m, "emptied bucket must leave the manifest"
+    assert "0" not in _state_buckets(state), "emptied bucket must leave the manifest"
     final = read_state_bucketed(spark, state)
     assert final.count() == 64 - len(keys_b0)
-    assert final.withColumn("_b", _bucket_col(n_buckets)).where("_b = 0").count() == 0
+    assert final.withColumn("_b", bucket("key", n_buckets)).where("_b = 0").count() == 0
 
 
 def test_bucketed_upsert_crash_between_write_and_flip_is_invisible(spark, tmp_path):
@@ -477,7 +524,6 @@ def test_bucketed_upsert_crash_between_write_and_flip_is_invisible(spark, tmp_pa
     import os
 
     from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        _read_manifest,
         merge_batch_bucketed,
         read_state_bucketed,
     )
@@ -531,7 +577,6 @@ def test_bucketed_upsert_epoch_replay_is_idempotent(spark, tmp_path):
     import os
 
     from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        _read_manifest,
         merge_batch_bucketed,
         read_state_bucketed,
     )
@@ -560,7 +605,7 @@ def test_bucketed_upsert_epoch_replay_is_idempotent(spark, tmp_path):
     assert replay == snap
     # every dir on disk is referenced by the manifest (vacuum holds)
     referenced = {
-        rel.split(os.sep)[0] for rel in _read_manifest(state).values()
+        rel.split(os.sep)[0] for rels in _state_buckets(state).values() for rel in rels
     }
     on_disk = {d for d in os.listdir(state) if d.startswith("epoch_v")}
     assert on_disk == referenced
@@ -574,7 +619,6 @@ def test_bucketed_upsert_trickle_does_not_grow_state_dir(spark, tmp_path):
     import os
 
     from kafka_topic_analyzer_spark.streaming.upsert_sink import (
-        _read_manifest,
         merge_batch_bucketed,
         read_state_bucketed,
     )
@@ -593,7 +637,7 @@ def test_bucketed_upsert_trickle_does_not_grow_state_dir(spark, tmp_path):
         )
         merge_batch_bucketed(one, state, e, n_buckets=4)
     referenced = {
-        rel.split(os.sep)[0] for rel in _read_manifest(state).values()
+        rel.split(os.sep)[0] for rels in _state_buckets(state).values() for rel in rels
     }
     on_disk = {d for d in os.listdir(state) if d.startswith("epoch_v")}
     assert on_disk == referenced
@@ -605,6 +649,55 @@ def test_bucketed_upsert_trickle_does_not_grow_state_dir(spark, tmp_path):
         .first()[0]
         == "v1-5"
     )
+
+
+def test_bucketed_retention_grace_stale_reader(spark, tmp_path):
+    """With retain_epochs=1 a reader holding a DataFrame resolved against
+    the PREVIOUS manifest survives one more flip; a second flip retires
+    the oldest epoch's dirs (disk stays bounded)."""
+    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
+        merge_batch_bucketed,
+        read_state_bucketed,
+    )
+
+    def batch(epoch, value):
+        return _kv_batch(spark, [("k1", 0, epoch, value)])
+
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    merge_batch_bucketed(batch(0, "a"), state, 0, n_buckets=4, retain_epochs=1)
+    stale = read_state_bucketed(spark, state)  # resolved against manifest v0
+
+    merge_batch_bucketed(batch(1, "b"), state, 1, n_buckets=4, retain_epochs=1)
+    # grace window: the superseded epoch-0 file still scans (old content)
+    assert [r["value"] for r in stale.collect()] == ["a"]
+
+    epochs = lambda: {  # noqa: E731
+        e.split("_")[1] for e in os.listdir(state) if e.startswith("epoch_v")
+    }
+    assert "v000000" in epochs()
+
+    merge_batch_bucketed(batch(2, "c"), state, 2, n_buckets=4, retain_epochs=1)
+    assert "v000000" not in epochs()  # beyond the window: collected
+    assert "v000001" in epochs()  # inside the window: retained
+    assert [r["value"] for r in read_state_bucketed(spark, state).collect()] == ["c"]
+
+
+def test_bucketed_default_retention_unchanged(spark, tmp_path):
+    """retain_epochs=0 (default): superseded dirs vanish at the next flip
+    and the manifest records no retention history."""
+    from kafka_topic_analyzer_spark.streaming import manifest as store
+    from kafka_topic_analyzer_spark.streaming.upsert_sink import (
+        merge_batch_bucketed,
+    )
+
+    state = str(tmp_path / "state")
+    os.makedirs(state)
+    merge_batch_bucketed(_kv_batch(spark, [("k1", 0, 0, "a")]), state, 0, n_buckets=4)
+    merge_batch_bucketed(_kv_batch(spark, [("k1", 0, 1, "b")]), state, 1, n_buckets=4)
+    epochs = {e.split("_")[1] for e in os.listdir(state) if e.startswith("epoch_v")}
+    assert epochs == {"v000001"}
+    assert store.read(state)["history"] == []
 
 
 def test_reconcile_restores_exact_semantics_after_horizon_replay(spark, tmp_path):
@@ -724,9 +817,8 @@ def test_bucketed_reconcile_restores_exact_and_touches_only_dirty_buckets(
 
     from pyspark.sql import functions as F
 
+    from kafka_topic_analyzer_spark.streaming import manifest as store
     from kafka_topic_analyzer_spark.streaming.sink_stream import (
-        _corpus_bucket,
-        _read_corpus_manifest,
         append_corpus_epoch,
         read_corpus_bucketed,
         reconcile_corpus_bucketed,
@@ -746,12 +838,12 @@ def test_bucketed_reconcile_restores_exact_and_touches_only_dirty_buckets(
             e,
             n_buckets=n_buckets,
         )
-    before = _read_corpus_manifest(corpus)
+    before = store.read(corpus)["tables"]["corpus"]
     dup_fps = {fp for _ts, fp, _i in resend}
     dirty_buckets = {
         r["_b"]
         for r in spark.createDataFrame([(f,) for f in dup_fps], "fp string")
-        .select(_corpus_bucket(n_buckets).alias("_b"))
+        .select(store.bucket("fp", n_buckets).alias("_b"))
         .distinct()
         .collect()
     }
@@ -762,7 +854,7 @@ def test_bucketed_reconcile_restores_exact_and_touches_only_dirty_buckets(
     assert stats["dirty_buckets"] == len(dirty_buckets)
     assert stats["dirty_buckets"] < n_buckets // 2, "scenario must be a trickle"
 
-    after = _read_corpus_manifest(corpus)
+    after = store.read(corpus)["tables"]["corpus"]
     for b, rels in before["buckets"].items():
         if int(b) in dirty_buckets:
             assert after["buckets"][b] != rels, f"dirty bucket {b} not compacted"
