@@ -104,20 +104,18 @@ def derived_partition_metrics(df: DataFrame) -> DataFrame:
             .cast("long")
         )
 
-    return (
-        df.withColumn("p_bytes", msg_bytes.cast("long"))  # A14
-        .withColumn("key_size_avg", floor_avg(key_bytes))  # A10
-        .withColumn("value_size_avg", floor_avg(value_bytes))  # A11
-        .withColumn("message_size_avg", floor_avg(msg_bytes))  # A11
-        .withColumn(
-            "dirty_ratio",  # A12: tombstone percentage, f32 in the reference
-            F.round(
+    return df.withColumns(
+        {
+            "p_bytes": msg_bytes.cast("long"),  # A14
+            "key_size_avg": floor_avg(key_bytes),  # A10
+            "value_size_avg": floor_avg(value_bytes),  # A11
+            "message_size_avg": floor_avg(msg_bytes),  # A11
+            "dirty_ratio": F.round(  # A12: tombstone percentage, f32 in the reference
                 F.when(
                     (F.col("total") > 0) & (F.col("tombstones") > 0),
                     F.col("tombstones") * F.lit(100.0) / F.col("total"),
                 ).otherwise(F.lit(0.0)),
                 4,
             ),
-        )
+        }
     )
-

@@ -51,7 +51,9 @@ PARTITION_REPORT_COLUMNS = [
 def partition_report(kdf: DataFrame) -> DataFrame:
     """Per-partition metric table (reference table at ``src/main.rs:150-172``)."""
     agg = kdf.groupBy(PARTITION).agg(*partition_metric_aggs())
-    return derived_partition_metrics(agg).select(*PARTITION_REPORT_COLUMNS).orderBy(PARTITION)
+    return _sorted_in_one_partition(
+        derived_partition_metrics(agg).select(*PARTITION_REPORT_COLUMNS), PARTITION
+    )
 
 
 def global_report(kdf: DataFrame) -> DataFrame:
@@ -78,4 +80,17 @@ def full_report(kdf: DataFrame) -> DataFrame:
         F.min(ts_seconds()).alias("earliest_ts_sec"),
         F.max(ts_seconds()).alias("latest_ts_sec"),
     )
-    return derived_partition_metrics(agg).orderBy(F.col("is_global"), F.col(PARTITION))
+    return _sorted_in_one_partition(derived_partition_metrics(agg), "is_global", PARTITION)
+
+
+def _sorted_in_one_partition(report: DataFrame, *cols: str) -> DataFrame:
+    """Order the report rows: one row per Kafka partition (plus the global
+    row), so a single task sorts them after the final aggregation.
+
+    ``orderBy`` would plan a range exchange, which costs a sampling job
+    and a shuffle stage for a table of a few dozen rows. ``coalesce(1)``
+    adds no exchange: the final-aggregation stage runs as one task over
+    the partial-aggregate rows, and sorting its only partition is a total
+    order.
+    """
+    return report.coalesce(1).sortWithinPartitions(*cols)

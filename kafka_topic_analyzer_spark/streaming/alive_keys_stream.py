@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from kafka_topic_analyzer_spark.operators.alive_keys import log_order
 from kafka_topic_analyzer_spark.schema import KEY, OFFSET, PARTITION, VALUE
 from kafka_topic_analyzer_spark.streaming.runner import run_bounded_memory_stream
 
@@ -84,7 +85,7 @@ def streaming_compacted_state(kdf_stream: DataFrame, spark: SparkSession) -> Dat
     # the memory table holds one update row per key per batch that touched
     # it; the final state per key is the latest (partition, offset)
     t = spark.table(name)
-    latest = F.struct(F.col("last_partition"), F.col("last_offset"))
+    latest = log_order("last_partition", "last_offset")
     return t.groupBy("key").agg(
         F.max_by("alive", latest).alias("alive"),
         F.max_by("last_partition", latest).alias("last_partition"),

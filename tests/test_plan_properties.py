@@ -34,9 +34,42 @@ def test_report_is_single_pass(spark):
     from kafka_topic_analyzer_spark.sources.events_log import kafka_frame_from_events
 
     plan = _executed(full_report(kafka_frame_from_events(spark, SF_SMOKE)))
-    # partial + final aggregate pair, one data shuffle (plus the 9-row sort)
+    # partial + final aggregate pair and one data shuffle; the 9-row sort
+    # runs in the single final task, with no range exchange
     assert plan.count("HashAggregate") == 2
-    assert plan.count("Exchange") <= 2
+    assert plan.count("Exchange") == 1
+
+
+def test_alive_keys_hash_aggregate(spark):
+    """max_by over the decimal log order keeps every buffer mutable, so the
+    key shuffle needs no per-key sort on either side."""
+    from kafka_topic_analyzer_spark.operators.alive_keys import (
+        alive_key_count,
+        compacted_state,
+    )
+    from kafka_topic_analyzer_spark.sources.events_log import kafka_frame_from_events
+
+    kdf = kafka_frame_from_events(spark, SF_SMOKE)
+    for df in (alive_key_count(kdf), compacted_state(kdf)):
+        plan = _executed(df)
+        assert "SortAggregate" not in plan
+        assert "HashAggregate" in plan
+
+
+def test_partition_report_launches_no_sampling_job(spark):
+    """Ordering the per-partition table takes no range exchange: over a
+    cached frame the report is one shuffle-map job plus one result job."""
+    from kafka_topic_analyzer_spark.operators.report import partition_report
+    from kafka_topic_analyzer_spark.sources.events_log import kafka_frame_from_events
+
+    kdf = kafka_frame_from_events(spark, SF_SMOKE).cache()
+    try:
+        kdf.count()
+        report = partition_report(kdf)
+        assert "rangepartitioning" not in _executed(report)
+        assert _jobs_launched(spark, report.collect) == 2
+    finally:
+        kdf.unpersist()
 
 
 def test_sampling_filter_is_scan_side(spark):

@@ -26,7 +26,7 @@ SECTIONS: list[tuple[str, str | None, str]] = [
     (
         "kafka_report_partition",
         "kafka_report_partition",
-        "The whole 15-column report is ONE HashAggregate pair (partial+final) over the scan — shuffle volume is O(partitions).",
+        "The whole 15-column report is ONE HashAggregate pair (partial+final) over the scan — shuffle volume is O(partitions). The final stage is `Coalesce 1` + a local `Sort`: ordering the table adds no range exchange and no sampling job.",
     ),
     (
         "benchmark_contamination",
