@@ -603,8 +603,9 @@ def simhash_near_dup_pairs(
 # Largest corpus embedding_near_dup_pairs broadcasts. The driver holds
 # one collected copy while building the broadcast (collect() materializes
 # Rows first, a 3-5x transient over the ~128 MB matrix at 250k x 64-dim
-# float64); larger corpora take the blocked strategy. Module-level so
-# tests can force the blocked side on small fixtures.
+# float64), and the strategy probe collects at most one row more; larger
+# corpora take the blocked strategy. Module-level so tests can force the
+# blocked side on small fixtures.
 _MAX_BROADCAST_ROWS = 250_000
 # Bytes of ONE blocked group's vectors; the block count derives from it.
 _BLOCK_GROUP_TARGET_BYTES = 256 << 20
@@ -615,8 +616,9 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (i < j, cosine >= threshold).
 
-    Two exact physical strategies, picked from the corpus row count the
-    operator probes (a cheap column-less ``count()`` on a plain table):
+    Two exact physical strategies, picked by one bounded collect of at
+    most ``_MAX_BROADCAST_ROWS + 1`` rows, which either is the broadcast
+    matrix or proves the corpus too large for it:
 
     * ``broadcast`` (up to ``_MAX_BROADCAST_ROWS``): the corpus matrix
       is broadcast once; each task scores its partition's block against
@@ -626,8 +628,9 @@ def embedding_near_dup_pairs(
     * ``blocked`` (above it): distributed block-nested-loop — each
       vector is replicated to the B block-pair groups it participates
       in (B(B+1)/2 groups via ``groupBy(p, q)``), and each group
-      cross-scores its two blocks with ``applyInPandas``. No driver
-      materialization at any size; shuffle volume is B x corpus (the
+      cross-scores its two blocks with ``applyInPandas``. Past the
+      bounded probe, which it drops before running, nothing reaches the
+      driver at any size; shuffle volume is B x corpus (the
       inherent replication of a distributed exact all-pairs scan). B is
       derived so one group's VECTORS (~2n/B x 64 doubles) fit
       ``_BLOCK_GROUP_TARGET_BYTES``; the quadratic pair-matrix term is
@@ -642,8 +645,10 @@ def embedding_near_dup_pairs(
     :func:`embedding_near_dups_lsh`, which prunes the pair space instead
     of enumerating it.
     """
-    n = emb.count()
-    if n > _MAX_BROADCAST_ROWS:
+    rows = emb.select("vec_id", "embedding").limit(_MAX_BROADCAST_ROWS + 1).collect()
+    if len(rows) > _MAX_BROADCAST_ROWS:
+        del rows  # free the probe before the count job
+        n = emb.count()
         # B >= 2*n*dim*8 / target for 64-dim float64 vectors  =>  one
         # group's vectors fit the target
         blocks = -(-2 * n * 64 * 8 // _BLOCK_GROUP_TARGET_BYTES)
@@ -656,7 +661,6 @@ def embedding_near_dup_pairs(
     import pandas as pd
 
     spark = emb.sparkSession
-    rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
     # norms with the same sequential-fold order as SQL norm()

@@ -1,19 +1,23 @@
 """Loaders for the driver-generated testdata tables (TESTDATA.md).
 
-All reads are plain ``spark.read.parquet`` so Catalyst column pruning and
-filter pushdown reach the scan. The one wrinkle: ``events.parquet``'s ``ts``
-physical type has varied across testdata generations — TIMESTAMP(NANOS)
-(readable only as a raw long via the legacy ``nanosAsLong`` conf) or native
-TIMESTAMP / TIMESTAMP_NTZ micros — so ``load_table`` normalizes ``ts`` to
-epoch-nanoseconds LongType either way; every downstream consumer divides by
-1e9 / 1e6 and is insulated from the storage type.
+All reads go through :func:`_read_parquet`: a plain ``spark.read.parquet``
+(so Catalyst column pruning and filter pushdown reach the scan) that infers
+each file's schema once per file version instead of once per call. The one
+wrinkle: ``events.parquet``'s ``ts`` physical type has varied across
+testdata generations — TIMESTAMP(NANOS) (readable only as a raw long via the
+legacy ``nanosAsLong`` conf) or native TIMESTAMP / TIMESTAMP_NTZ micros — so
+``load_table`` normalizes ``ts`` to epoch-nanoseconds LongType either way;
+every downstream consumer divides by 1e9 / 1e6 and is insulated from the
+storage type.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from kafka_topic_analyzer_spark.schema import TESTDATA_TABLES
 from kafka_topic_analyzer_spark.session import prepare_session
@@ -175,6 +179,44 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df.withColumn("ts", nanos)
 
 
+# Confs that change the schema Spark infers from a parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+# (path, st_mtime_ns, st_size, conf values) -> inferred StructType
+_INFERRED_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per file.
+
+    Inference runs a footer-reading Spark job on every plain read (about
+    65 ms for ``events.parquet``; 10 ms and no job with the schema given).
+    The inferred schema is kept under the file's ``(st_mtime_ns, st_size)``
+    and the confs that shape it, so a regenerated file is inferred afresh
+    and ``_probe_schema`` still sees real drift. Directories (whose part
+    files can change under an unchanged stamp), non-local and missing
+    paths are read plainly.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size,
+           tuple(spark.conf.get(c) for c in _SCHEMA_CONFS))
+    schema = _INFERRED_SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _INFERRED_SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, parallel: bool | None = None
 ) -> DataFrame:
@@ -192,7 +234,7 @@ def load_table(
     queries/relational.py float discipline).
     """
     prepare_session(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     _probe_schema(df, name)  # metadata-only; fails fast + clear on drift
     if name == "events":
         df = normalize_events_ts(df)

@@ -23,21 +23,21 @@ from kafka_topic_analyzer_spark.functions.metrics import derived_partition_metri
 from kafka_topic_analyzer_spark.schema import PARTITION
 from kafka_topic_analyzer_spark.session import prepare_session
 from kafka_topic_analyzer_spark.sources.events_log import kafka_frame_from_events_df
-from kafka_topic_analyzer_spark.sources.tables import normalize_events_ts
+from kafka_topic_analyzer_spark.sources.tables import _read_parquet, normalize_events_ts
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file-source stream over events.parquet (the source must be a
     directory; pathGlobFilter narrows it to the one table).
 
-    The declared read schema is taken from the parquet footer (a batch
-    ``spark.read`` that only touches metadata) rather than hard-coded: the
+    The declared read schema is taken from the parquet footer (inferred
+    once per file version by ``_read_parquet``) rather than hard-coded: the
     driver's testdata generations have shipped ``ts`` as both TIMESTAMP(NANOS)
     and native TIMESTAMP_NTZ. ``normalize_events_ts`` then presents the same
     epoch-nanos LongType to every downstream stream regardless.
     """
     prepare_session(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    schema = _read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(schema)
         .format("parquet")

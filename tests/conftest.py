@@ -26,6 +26,20 @@ def spark():
     yield s
 
 
+def jobs_launched(spark, build) -> int:
+    """Number of Spark jobs ``build()`` launches, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"construct-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "construction job count")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class DuckOracle:
     """DuckDB connection with the testdata views registered like the driver does."""
 

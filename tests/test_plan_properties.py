@@ -7,7 +7,7 @@ broadcast, aggregates partially aggregated before the exchange.
 
 from __future__ import annotations
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_launched
 
 
 def _executed(df) -> str:
@@ -67,7 +67,7 @@ def test_partition_report_launches_no_sampling_job(spark):
         kdf.count()
         report = partition_report(kdf)
         assert "rangepartitioning" not in _executed(report)
-        assert _jobs_launched(spark, report.collect) == 2
+        assert jobs_launched(spark, report.collect) == 2
     finally:
         kdf.unpersist()
 
@@ -141,20 +141,6 @@ def test_consensus_joins_stay_keyed(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def _jobs_launched(spark, build) -> int:
-    """Number of Spark jobs ``build()`` launches, counted by job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"construct-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "construction job count")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_near_dup_construction_launches_no_probe_jobs(spark):
     """Building the registered SimHash and embedding-LSH near-dup queries
     launches no more jobs than loading their input table: no size probe
@@ -167,9 +153,21 @@ def test_near_dup_construction_launches_no_probe_jobs(spark):
         ("simhash_near_dups", "documents"),
         ("embedding_near_dups_lsh", "embeddings"),
     ):
-        load_jobs = _jobs_launched(spark, lambda: load_table(spark, SF_SMOKE, table))
-        query_jobs = _jobs_launched(spark, lambda: qs[name](spark, SF_SMOKE))
+        load_jobs = jobs_launched(spark, lambda: load_table(spark, SF_SMOKE, table))
+        query_jobs = jobs_launched(spark, lambda: qs[name](spark, SF_SMOKE))
         assert query_jobs <= load_jobs, (name, query_jobs, load_jobs)
+
+
+def test_embedding_pairs_construction_collects_once(spark):
+    """Choosing the exact pair strategy and collecting the broadcast matrix
+    is one bounded collect (plus the repartition's shuffle job), not a
+    count probe followed by a second collect."""
+    from kafka_topic_analyzer_spark.operators.dedup import embedding_near_dup_pairs
+    from kafka_topic_analyzer_spark.sources.tables import load_table
+    from tests.conftest import SF_ORACLE
+
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    assert jobs_launched(spark, lambda: embedding_near_dup_pairs(emb)) <= 2
 
 
 def test_embedding_lsh_verify_has_no_driver_collect(spark):

@@ -13,7 +13,7 @@ import datetime
 
 import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_launched
 
 
 def _write_parquet(spark, tmp_path, name, df):
@@ -90,3 +90,28 @@ def test_width_drift_is_tolerated(spark, tmp_path):
     sf_dir = _write_parquet(spark, tmp_path, "nation", drifted)
     back = load_table(spark, sf_dir, "nation")
     assert dict(back.dtypes)["n_nationkey"] == "bigint"
+
+
+def test_second_load_infers_no_schema(spark):
+    """Schema inference (a footer-reading job) runs once per fixture file."""
+    from kafka_topic_analyzer_spark.sources.tables import load_table
+
+    for name in ("events", "embeddings"):
+        load_table(spark, SF_SMOKE, name)
+        assert jobs_launched(spark, lambda: load_table(spark, SF_SMOKE, name)) == 0
+
+
+def test_rewritten_fixture_is_inferred_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from kafka_topic_analyzer_spark.sources.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    cols = {"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}
+    pq.write_table(pa.table(cols), path)
+    assert load_table(spark, str(tmp_path), "region").columns == list(cols)
+
+    pq.write_table(pa.table({**cols, "r_comment": ["a", "b"]}), path)
+    back = load_table(spark, str(tmp_path), "region")
+    assert back.columns == [*cols, "r_comment"]
+    assert sorted(r.r_comment for r in back.collect()) == ["a", "b"]

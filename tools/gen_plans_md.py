@@ -3,10 +3,15 @@
 Keeps the plan documentation honest: run after planner-affecting changes
 (`python tools/gen_plans_md.py`). Notes are maintained here; plans are
 always regenerated from the current code at sf0.001 on local[8].
+
+`python tools/gen_plans_md.py --check` regenerates in memory, compares
+with the committed PLANS.md with plan_id numbers masked, and exits 1
+naming each stale section (the file is left as it is).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -15,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.001"
 WIDTH = 160
+PLANS_MD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 
 # (section title, registry name or None, "what to notice")
 SECTIONS: list[tuple[str, str | None, str]] = [
@@ -213,7 +219,8 @@ def _blocked_builder(spark):
         return D.embedding_near_dup_pairs(emb, threshold=0.4)
 
 
-def main() -> None:
+def render() -> str:
+    """PLANS.md as the current code plans it (expression ids stripped)."""
     from kafka_topic_analyzer_spark.registry import all_queries
     from kafka_topic_analyzer_spark.session import get_spark, prepare_session
 
@@ -237,10 +244,45 @@ def main() -> None:
         out += [f"## {title}", "", f"**What to notice:** {note}", "", "```"]
         out += lines
         out += ["```", ""]
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
-    with open(path, "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote {path}: {len(SECTIONS)} sections")
+    return "\n".join(out)
+
+
+def _sections(text: str) -> dict[str, str]:
+    """``## title`` -> section body, with plan_id numbers masked.
+
+    The mask runs to the end of the line: plan_id is the last field of a
+    plan line, and a number of another width moves where WIDTH cuts it."""
+    text = re.sub(r"plan_id=.*$", "plan_id=N", text, flags=re.M)
+    parts = re.split(r"^## (.+)$", text, flags=re.M)
+    return {"(header)": parts[0], **dict(zip(parts[1::2], parts[2::2]))}
+
+
+def stale_sections(committed: str, live: str) -> list[str]:
+    """Titles whose committed body differs from the live one, in live order,
+    followed by committed titles the generator no longer produces."""
+    old, new = _sections(committed), _sections(live)
+    return [t for t in new if old.get(t) != new[t]] + [t for t in old if t not in new]
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--check", action="store_true",
+                    help="compare with the committed PLANS.md instead of writing it")
+    args = ap.parse_args()
+    live = render()
+    if args.check:
+        with open(PLANS_MD) as f:
+            stale = stale_sections(f.read(), live)
+        if stale:
+            print(f"{PLANS_MD} is stale in {len(stale)} section(s):")
+            for title in stale:
+                print(f"  {title}")
+            sys.exit(1)
+        print(f"{PLANS_MD} is current: {len(SECTIONS)} sections")
+        return
+    with open(PLANS_MD, "w") as f:
+        f.write(live)
+    print(f"wrote {PLANS_MD}: {len(SECTIONS)} sections")
 
 
 if __name__ == "__main__":
